@@ -3,10 +3,9 @@
 This is what Spark executes inside ``mapInPandas``: per Arrow batch,
 all character-level work (line classification, binarization, ink
 profiles) is done with pandas/numpy vectorized string ops across the
-*flattened line array of the whole batch*; only the cheap per-page
-region assembly (a state machine over a few dozen line labels) runs as
-Python, mirroring how the reference iterates over per-page contour
-lists after vectorized numpy/OpenCV passes.
+*flattened line array of the whole batch*; region assembly, column
+detection and span emission run as segmented numpy over the batch too
+(per-page resets), with Python only in small per-region patch loops.
 
 Reference parity (all citations into /root/reference/qurator/eynollah):
 - two-model classification + binarized-retry gate: eynollah.py:1148-1379
@@ -233,13 +232,6 @@ def _flatten_lines_arrow(texts: pd.Series):
     return lines_pa, turn_ord, line_start, n_per, lens
 
 
-def _flatten_lines(texts: pd.Series):
-    """Back-compat pandas wrapper around the Arrow flattener."""
-    lines_pa, turn_ord, line_start, n_per, _ = _flatten_lines_arrow(texts)
-    lines = pd.Series(lines_pa.to_numpy(zero_copy_only=False), dtype="object")
-    return lines, turn_ord, line_start, n_per
-
-
 SPAN_COLUMNS = [
     "span_idx",
     "region_type",
@@ -319,11 +311,12 @@ def analyze_turns_frames(
     pdf: pd.DataFrame, model: LineModel | None = None
 ) -> list[pd.DataFrame]:
     """Iterator-friendly twin of ``analyze_turns_batch``: returns the
-    fast-path and slow-path frames as a LIST (0-2 entries) instead of
-    concatenating them — mapInPandas yields each directly, skipping
-    the pandas block consolidation that concat forces. Row order
-    across the frames is NOT part of the contract (extract.py imposes
-    the conversation windows downstream)."""
+    frames of the two emission front ends (``_emit_fast`` for pages
+    without column splits, ``_emit_cols`` for column pages) as a LIST
+    (0-2 entries) instead of concatenating them — mapInPandas yields
+    each directly, skipping the pandas block consolidation that concat
+    forces. Row order across the frames is NOT part of the contract
+    (extract.py imposes the conversation windows downstream)."""
     return _analyze_batch(pdf, model, want_diag=False, as_frames=True)
 
 
@@ -416,8 +409,6 @@ def _analyze_batch(
     # (border trim, fence toggles, agreement gate, band splits, region
     # runs) runs once over the flattened batch with per-page resets,
     # and Python touches only per-REGION lists (~spans/3 items).
-    span_rows = []
-    diag_rows = []
     P = len(pdf)
     n = len(lines_pa)
     offsets = np.zeros(P + 1, dtype=np.int64)
@@ -431,6 +422,14 @@ def _analyze_batch(
 
     page = np.repeat(np.arange(P, dtype=np.int64), n_per)
     rel = np.arange(n, dtype=np.int64) - np.repeat(firsts, n_per)
+    nz = n_per > 0
+
+    def page_excl(mask):
+        """Per-page exclusive prefix count of a per-line mask."""
+        excl = np.cumsum(mask) - mask
+        base = np.zeros(P, dtype=np.int64)
+        base[nz] = excl[firsts[nz]]
+        return excl - base[page]
 
     # §2 border strip: first banner in the leading scan window sets lo,
     # first footer in the trailing window sets hi (<= 3 gathers each)
@@ -457,11 +456,7 @@ def _analyze_batch(
 
     # §3 fence toggle: per-page exclusive prefix parity of fence marks
     fm = is_fence_marker & active
-    excl_f = np.cumsum(fm) - fm
-    base_f = np.zeros(P, dtype=np.int64)
-    nz = n_per > 0
-    base_f[nz] = excl_f[firsts[nz]]
-    in_fence_before = ((excl_f - base_f[page]) % 2).astype(bool)
+    in_fence_before = (page_excl(fm) % 2).astype(bool)
 
     # §4 agreement gate per page
     classifiable = active & ~fm & ~in_fence_before
@@ -522,10 +517,7 @@ def _analyze_batch(
     band_event = (blank & (run_len == cfg.band_blank_gap)) | (
         active & (cls == C_SEP)
     )
-    excl_b = np.cumsum(band_event) - band_event
-    base_b = np.zeros(P, dtype=np.int64)
-    base_b[nz] = excl_b[firsts[nz]]
-    band = excl_b - base_b[page]
+    band = page_excl(band_event)
 
     # §5b region runs: maximal adjacent same-label runs of region lines;
     # header/dropcap/separator lines are singleton regions
@@ -556,20 +548,13 @@ def _analyze_batch(
     # utils/__init__.py:799-858): a short TEXT region whose MODEL-B
     # (binarized — the dedicated header model analog) header-line
     # character mass reaches its text mass relabels to ONE header
-    # region. Segment reductions over the region runs; the sentinel
-    # pad keeps end == n a legal reduceat index.
-    if len(starts) and not cfg.full_layout:
-        reg_label = cls[starts]  # no-full-layout: vote disabled
-    elif len(starts):
-        reg_label = cls[starts]
-        idx2v = np.empty(2 * len(starts), dtype=np.int64)
-        idx2v[0::2] = starts
-        idx2v[1::2] = starts + counts
-        sentv = np.zeros(1, dtype=np.int64)
+    # region (full-layout mode only). Segment reductions over the runs.
+    reg_label = cls[starts]
+    if cfg.full_layout and len(starts):
         hline = np.where(cls_b == C_HEADER, s_len, 0)
-        hmass = np.add.reduceat(np.concatenate([hline, sentv]), idx2v)[0::2]
-        allmass = np.add.reduceat(np.concatenate([s_len, sentv]), idx2v)[0::2]
-        maxlen = np.maximum.reduceat(np.concatenate([s_len, sentv]), idx2v)[0::2]
+        hmass = _seg_reduce(np.add, hline, starts, counts)
+        allmass = _seg_reduce(np.add, s_len, starts, counts)
+        maxlen = _seg_reduce(np.maximum, s_len, starts, counts)
         vote = (
             (reg_label == C_TEXT)
             & (counts <= cfg.header_vote_max_lines)
@@ -578,493 +563,298 @@ def _analyze_batch(
             & (2 * hmass >= allmass)
         )
         reg_label[vote] = C_HEADER
-    else:
-        reg_label = np.zeros(0, dtype=np.int8)
 
-    # ---- span-mode fast path: pages needing no column splits (the
-    # large majority) emit entirely as numpy arrays — the §8
-    # drop-capital merge and §9 fragment adherence are handled
-    # array-natively in _emit_fast; only pages with actual gutter
-    # splits (incl. deskewed ones) fall back to the per-page path
-    # below. Tool pages are fast by construction (one pseudo-region of
-    # all nonblank lines).
-    fast_df = None
-    if not want_diag and n and not cfg.enable_line_split:
-        r_page = page[starts]
-        r_label = reg_label
-        complex_page = np.zeros(P, dtype=bool)
-        # §6/§6d pre-check only where the page is otherwise simple;
-        # the full (shifts, sheared_profile, gutters) triple is cached
-        # so the per-page path never recomputes. A skewed block whose
-        # shear finds NO gutters emits exactly as unsheared (SPEC §6d),
-        # so it stays on the fast path — only real column structure
-        # routes a page to the per-page walk.
-        # note: dropcap/fragment pages (already complex) are NOT
-        # excluded — caching their blocks here means the per-page
-        # path never recomputes the gutter/deskew machinery
-        gutter_cache: dict[int, tuple] = {}
-        if len(starts):
-            eligible = np.flatnonzero(
-                (r_label == C_TEXT)
-                & (counts >= cfg.min_block_lines)
-                & ~tool_page[r_page]
-            )
-        else:
-            eligible = np.zeros(0, dtype=np.int64)
-        if len(eligible):
-            st_e = starts[eligible].astype(np.int64)
-            cn_e = counts[eligible].astype(np.int64)
-            # segment reductions over [start, start+count) pairs; the
-            # sentinel pad keeps end == n a legal reduceat index
-            idx2 = np.empty(2 * len(st_e), dtype=np.int64)
-            idx2[0::2] = st_e
-            idx2[1::2] = st_e + cn_e
-            sent = np.zeros(1, dtype=np.int64)
-            wb = np.maximum.reduceat(np.concatenate([raw_len, sent]), idx2)[0::2]
-            # vectorized LS-slope gate (SPEC §6d): A/B per block
-            sy = np.add.reduceat(np.concatenate([lstr_len, sent]), idx2)[0::2]
-            gidx = np.arange(n, dtype=np.int64) * lstr_len
-            sgy = np.add.reduceat(np.concatenate([gidx, sent]), idx2)[0::2]
-            sky = sgy - st_e * sy
-            sk = cn_e * (cn_e - 1) // 2
-            sk2 = (cn_e - 1) * cn_e * (2 * cn_e - 1) // 6
-            A_e = cn_e * sky - sk * sy
-            B_e = cn_e * sk2 - sk * sk
-            skewed = (B_e > 0) & (np.abs(A_e) >= cfg.slope_threshold * B_e)
-            # recompute oversized blocks' gate with Python's arbitrary-
-            # precision ints — same arithmetic as the per-page path and
-            # the oracle. Two wrap routes: B_e ~ cn^4/12 (cn bound) and
-            # A_e <= ~1.5*cn^2*sum(leads) (pathological indents); the
-            # float test is conservative with 3x headroom under 2^63
-            unsafe = (
-                cn_e.astype(np.float64) ** 2 * sy.astype(np.float64)
-            ) > 3.0e18
-            oversize = np.flatnonzero((cn_e > _LS_GATE_MAX_LINES) | unsafe)
-            exact_ab: dict[int, tuple] = {}
-            for j in oversize:
-                st_j, cn_j = int(st_e[j]), int(cn_e[j])
-                A, B = _ls_slope_int(
-                    [int(v) for v in lstr_len[st_j : st_j + cn_j]]
-                )
-                skewed[j] = B > 0 and abs(A) >= cfg.slope_threshold * B
-                exact_ab[int(j)] = (A, B)  # int64 A_e/B_e may have wrapped
+    # ---- §6/§6d block gutters: every eligible TEXT block, straight or
+    # skewed and of any width, is profiled in batched UTF-32 grid
+    # chunks. Only blocks WITH gutters are cached: block start ->
+    # (shifts, sheared profile, gutters). A skewed block whose shear
+    # finds nothing emits exactly as unsheared (SPEC §6d).
+    r_page = page[starts]
+    gutter_cache: dict[int, tuple] = {}
+    eligible = np.flatnonzero(
+        (reg_label == C_TEXT) & (counts >= cfg.min_block_lines) & ~tool_page[r_page]
+    )
+    if len(eligible):
+        st_e = starts[eligible].astype(np.int64)
+        cn_e = counts[eligible].astype(np.int64)
+        wb = _seg_reduce(np.maximum, raw_len, st_e, cn_e)
+        # vectorized LS-slope gate (SPEC §6d): A/B per block
+        sy = _seg_reduce(np.add, lstr_len, st_e, cn_e)
+        sgy = _seg_reduce(np.add, np.arange(n, dtype=np.int64) * lstr_len, st_e, cn_e)
+        sky = sgy - st_e * sy
+        sk = cn_e * (cn_e - 1) // 2
+        sk2 = (cn_e - 1) * cn_e * (2 * cn_e - 1) // 6
+        A_e = cn_e * sky - sk * sy
+        B_e = cn_e * sk2 - sk * sk
+        skewed = (B_e > 0) & (np.abs(A_e) >= cfg.slope_threshold * B_e)
+        # recompute oversized blocks' gate with Python's arbitrary-
+        # precision ints — same arithmetic as the oracle. Two wrap
+        # routes: B_e ~ cn^4/12 (cn bound) and A_e <= ~1.5*cn^2*sum(leads)
+        # (pathological indents); the float test is conservative with
+        # 3x headroom under 2^63
+        unsafe = (cn_e.astype(np.float64) ** 2 * sy.astype(np.float64)) > 3.0e18
+        exact_ab: dict[int, tuple] = {}
+        for j in np.flatnonzero((cn_e > _LS_GATE_MAX_LINES) | unsafe).tolist():
+            A, B = _ls_slope_int(lstr_len[st_e[j] : st_e[j] + cn_e[j]].tolist())
+            skewed[j] = B > 0 and abs(A) >= cfg.slope_threshold * B
+            exact_ab[j] = (A, B)  # int64 A_e/B_e may have wrapped
 
-            # batched profiles: ALL narrow blocks (straight and
-            # skewed) share ONE UTF-32 grid per chunk instead of
-            # per-block numpy dispatch; straight blocks run the
-            # grid-vectorized valley machinery, skewed blocks feed
-            # their chunk ink rows straight into the shear grid
-            WCAP = 192
-            gridable = np.flatnonzero((wb > 0) & (wb <= WCAP))
-            pos = 0
-            while pos < len(gridable):
-                take = []
-                tot = 0
-                while pos < len(gridable) and tot < 16384:
-                    j = int(gridable[pos])
-                    take.append(j)
-                    tot += int(cn_e[j])
-                    pos += 1
-                sel = np.asarray(take, dtype=np.int64)
-                st_s = st_e[sel]
-                cn_s = cn_e[sel]
+        grid_e = np.flatnonzero(wb > 0)
+        for a, b in _grid_chunks(cn_e[grid_e], wb[grid_e]):
+            sel = grid_e[a:b]
+            cn_s = cn_e[sel]
+            W = int(wb[sel].max())
+            li = _line_ids(st_e[sel], cn_s)
+            # per-block column sums via ONE bincount over the ink
+            # coordinates; the same coordinates feed the shear grid
+            rows_nz, cols_nz = np.nonzero(_ink_grid(lines_np, raw_len, li, W))
+            blk_nz = np.repeat(np.arange(len(sel), dtype=np.int64), cn_s)[rows_nz]
+            prof_all = np.bincount(
+                blk_nz * W + cols_nz, minlength=len(sel) * W
+            ).reshape(len(sel), W)
+            unsheared = ~skewed[sel]
+            sheared = []  # (chunk row, shifts, sheared profile)
+            sk_rows = np.flatnonzero(skewed[sel]).tolist()
+            if sk_rows:
                 reg_first = np.cumsum(cn_s) - cn_s
-                li = np.repeat(st_s - reg_first, cn_s) + np.arange(
-                    int(cn_s.sum()), dtype=np.int64
-                )
-                grid = (
-                    lines_np[li]
-                    .astype(f"U{WCAP}")
-                    .view(np.uint32)
-                    .reshape(len(li), WCAP)
-                )
-                lens_li = raw_len[li]
-                ink = (grid != 32) & (
-                    np.arange(WCAP, dtype=np.int64)[None, :] < lens_li[:, None]
-                )
-                # per-block column sums via ONE bincount over the ink
-                # coordinates (touches only the ~3% inked cells, vs a
-                # full-grid cumsum); the same coordinate arrays feed
-                # the shear grid for skewed blocks below
-                nsk = ~skewed[sel]
-                rows_nz, cols_nz = np.nonzero(ink)
-                blk_of_row = np.repeat(
-                    np.arange(len(take), dtype=np.int64), cn_s
-                )
-                blk_nz = blk_of_row[rows_nz]
-                prof_all = np.bincount(
-                    blk_nz * WCAP + cols_nz, minlength=len(take) * WCAP
-                ).reshape(len(take), WCAP)
-                # batched valley machinery: quick reject, run
-                # extraction, smoothing and prominence all run as grid
-                # ops over the whole chunk (bit-identical per row to
-                # the scalar _select_gutters — A/B-fuzzed)
-                gl = _select_gutters_batch(prof_all[nsk], wb[sel][nsk], cfg)
-                gi = 0
-                pend = []  # sheared blocks: (j, st, shifts, sh_prof)
-                skew_jj = []
-                for jj, j in enumerate(take):
-                    if not skewed[j]:
-                        g = gl[gi]
-                        gi += 1
-                        gutter_cache[int(st_e[j])] = (None, None, g)
-                        if g:
-                            complex_page[r_page[eligible[j]]] = True
+                specs = []
+                for jj in sk_rows:
+                    j = int(sel[jj])
+                    rf, nl = int(reg_first[jj]), int(cn_s[jj])
+                    lo_nz, hi_nz = np.searchsorted(blk_nz, [jj, jj + 1])
+                    A, B = exact_ab.get(j, (int(A_e[j]), int(B_e[j])))
+                    specs.append((
+                        A, B, raw_len[li[rf : rf + nl]],
+                        rows_nz[lo_nz:hi_nz] - rf, cols_nz[lo_nz:hi_nz],
+                    ))
+                for jj, res in zip(sk_rows, _choose_shear_batch(specs, cfg)):
+                    if res is None:
+                        unsheared[jj] = True
                     else:
-                        skew_jj.append(jj)
-                if skew_jj:
-                    # the whole chunk's shear grids in one batch; ink
-                    # coordinates come from the shared bincount pass
-                    specs = []
-                    for jj in skew_jj:
-                        j = take[jj]
-                        rf = int(reg_first[jj])
-                        n_ = int(cn_s[jj])
-                        st = int(st_e[j])
-                        lo = np.searchsorted(blk_nz, jj)
-                        hi = np.searchsorted(blk_nz, jj + 1)
-                        ab = exact_ab.get(int(j))
-                        if ab is None:
-                            ab = (int(A_e[j]), int(B_e[j]))
-                        specs.append(
-                            (
-                                ab[0],
-                                ab[1],
-                                lens_li[rf : rf + n_],
-                                rows_nz[lo:hi] - rf,
-                                cols_nz[lo:hi],
-                            )
-                        )
-                    for jj, res in zip(
-                        skew_jj, _choose_shear_batch(specs, cfg)
-                    ):
-                        j = take[jj]
-                        st = int(st_e[j])
-                        if res is not None:
-                            # sheared-profile gutters batch below
-                            pend.append((j, st, res[1], res[2]))
-                            continue
-                        n_ = int(cn_s[jj])
-                        g = _find_gutters(
-                            lines_np, raw_len, range(st, st + n_), cfg
-                        )
-                        gutter_cache[st] = (None, None, g)
-                        if g:
-                            complex_page[r_page[eligible[j]]] = True
-                if pend:
-                    wmaxp = max(len(p[3]) for p in pend)
-                    pgrid = np.zeros((len(pend), wmaxp), dtype=np.int64)
-                    for r, (_j, _st, _sh, pr) in enumerate(pend):
-                        pgrid[r, : len(pr)] = pr
-                    gls = _select_gutters_batch(
-                        pgrid, [len(p[3]) for p in pend], cfg
-                    )
-                    for r, (j, st, sh, pr) in enumerate(pend):
-                        g = gls[r]
-                        gutter_cache[st] = (sh, pr, g)
-                        if g:
-                            complex_page[r_page[eligible[j]]] = True
-
-            # wide blocks (> WCAP): per-block path (shear grid / grid
-            # fallback)
-            rest = np.flatnonzero(wb > WCAP)
-            for j in rest:
-                n_ = int(cn_e[j])
-                st = int(st_e[j])
-                shifts = None
-                sh_prof = None
-                if skewed[j]:
-                    lens_r = raw_len[st : st + n_]
-                    wblk = int(wb[j])
-                    if wblk > 0:
-                        blk = lines_np[st : st + n_]
-                        grid = blk.astype(f"U{wblk}").view(np.uint32).reshape(n_, wblk)
-                        valid = (
-                            np.arange(wblk, dtype=np.int64)[None, :]
-                            < lens_r[:, None]
-                        )
-                        ink = (grid != 32) & valid
-                        res = _choose_shear(
-                            ink, lens_r, lstr_len[st : st + n_], cfg
-                        )
-                        if res is not None:
-                            _s_star, shifts, sh_prof = res
-                if shifts is not None:
-                    g = _select_gutters(sh_prof, cfg)
-                else:
-                    g = _find_gutters(lines_np, raw_len, range(st, st + n_), cfg)
-                gutter_cache[st] = (shifts, sh_prof, g)
-                if g:
-                    complex_page[r_page[eligible[j]]] = True
-        simple_page = ~complex_page
-        # fast region table: real regions on simple non-tool pages +
-        # one pseudo-region per non-empty tool page
-        if len(starts):
-            rmask = simple_page[r_page] & ~tool_page[r_page]
-            fr_start = starts[rmask]
-            fr_count = counts[rmask]
-            fr_label = r_label[rmask]
-            fr_band = band[starts][rmask]
-            fr_page = r_page[rmask]
-        else:
-            fr_start = fr_count = fr_label = fr_band = fr_page = np.zeros(0, np.int64)
-        tp = np.flatnonzero(tool_page & (n_per > 0))
-        if len(tp):
-            fr_start = np.concatenate([fr_start, firsts[tp]])
-            fr_count = np.concatenate([fr_count, n_per[tp]])
-            fr_label = np.concatenate([fr_label, np.full(len(tp), C_TOOL, np.int8)])
-            fr_band = np.concatenate([fr_band, np.zeros(len(tp), np.int64)])
-            fr_page = np.concatenate([fr_page, tp])
-        if len(fr_start):
-            fast_df = _emit_fast(
-                fr_start, fr_count, fr_label, fr_band, fr_page,
-                pdf, stripped_np, line_start + lstr_len, s_len, lstr_len, cfg,
+                        sheared.append((jj, res[1], res[2]))
+            rows = np.flatnonzero(unsheared)
+            found = zip(
+                rows.tolist(),
+                _select_gutters_batch(prof_all[rows], wb[sel[rows]], cfg),
             )
-        # §6p batched page-union profiles: every complex page with
-        # >= 2 text blocks detects page columns over the UNION ink
-        # profile of its text-block lines (SPEC §6p). Batching the
-        # profiles into per-chunk coordinate bincounts + the grid
-        # valley machinery removes the per-page U-grid build and
-        # scalar _select_gutters call from the slow-path walk (the
-        # two dominated _emit_page time once blocks were batched).
-        # Pages wider than _PG_WCAP keep the per-page fallback.
-        page_gutter_cache: dict[int, list] = {}
-        cplx = complex_page & ~tool_page
-        if cplx.any() and len(starts):
-            txt_r = np.flatnonzero((r_label == C_TEXT) & cplx[r_page])
-            ntb = np.bincount(r_page[txt_r], minlength=P)
-            elig_r = txt_r[ntb[r_page[txt_r]] >= 2]
-            if len(elig_r):
-                st_r = starts[elig_r].astype(np.int64)
-                cn_r = counts[elig_r].astype(np.int64)
-                pg_of_r = r_page[elig_r]
-                # per-page max text-line width via segment reductions
-                idx2p = np.empty(2 * len(st_r), dtype=np.int64)
-                idx2p[0::2] = st_r
-                idx2p[1::2] = st_r + cn_r
-                sentp = np.zeros(1, dtype=np.int64)
-                wreg = np.maximum.reduceat(
-                    np.concatenate([raw_len, sentp]), idx2p
-                )[0::2]
-                pw = np.zeros(P, dtype=np.int64)
-                np.maximum.at(pw, pg_of_r, wreg)
-                _PG_WCAP = 512
-                keep = (pw[pg_of_r] > 0) & (pw[pg_of_r] <= _PG_WCAP)
-                st_r, cn_r, pg_of_r = st_r[keep], cn_r[keep], pg_of_r[keep]
-                # group regions by page (pages are contiguous after
-                # this stable sort), then chunk pages by line volume
-                order = np.argsort(pg_of_r, kind="stable")
-                st_r, cn_r, pg_of_r = st_r[order], cn_r[order], pg_of_r[order]
-                upage, ufirst = np.unique(pg_of_r, return_index=True)
-                ulast = np.append(ufirst[1:], len(pg_of_r))
-                pos = 0
-                while pos < len(upage):
-                    take_end = pos
-                    tot = 0
-                    while take_end < len(upage) and tot < 16384:
-                        tot += int(
-                            cn_r[ufirst[take_end] : ulast[take_end]].sum()
-                        )
-                        take_end += 1
-                    rsel = slice(ufirst[pos], ulast[take_end - 1])
-                    st_s, cn_s = st_r[rsel], cn_r[rsel]
-                    pg_s = pg_of_r[rsel]
-                    reg_first = np.cumsum(cn_s) - cn_s
-                    li = np.repeat(st_s - reg_first, cn_s) + np.arange(
-                        int(cn_s.sum()), dtype=np.int64
-                    )
-                    W = int(pw[upage[pos:take_end]].max())
-                    grid = (
-                        lines_np[li]
-                        .astype(f"U{W}")
-                        .view(np.uint32)
-                        .reshape(len(li), W)
-                    )
-                    lens_li = raw_len[li]
-                    ink = (grid != 32) & (
-                        np.arange(W, dtype=np.int64)[None, :]
-                        < lens_li[:, None]
-                    )
-                    # page slot per line row of this chunk
-                    pslot = np.repeat(
-                        np.searchsorted(upage[pos:take_end], pg_s), cn_s
-                    )
-                    rows_nz, cols_nz = np.nonzero(ink)
-                    nchunk = take_end - pos
-                    prof = np.bincount(
-                        pslot[rows_nz] * W + cols_nz, minlength=nchunk * W
-                    ).reshape(nchunk, W)
-                    gl = _select_gutters_batch(
-                        prof, pw[upage[pos:take_end]], cfg
-                    )
-                    for s, p in enumerate(upage[pos:take_end]):
-                        # (page text width, gutters): the width bounds
-                        # the final column segment in _emit_page
-                        page_gutter_cache[int(offsets[p])] = (
-                            int(pw[p]),
-                            gl[s],
-                        )
-                    pos = take_end
-        # --- widened fast path: complex pages WITHOUT page-gutter mode
-        # (~96% of them) emit batch-vectorized via _emit_cols; only
-        # pages where §6p page-column mode can fire (>= 2 text blocks
-        # with a cached non-empty page gutter, or an uncached wide
-        # page) keep the per-page walk ---------------------------------
-        cols_df = None
-        cplx_pages = np.flatnonzero(complex_page & ~tool_page)
-        if _EMIT_COLS and len(cplx_pages):
-            if len(starts):
-                ntext_page = np.bincount(
-                    r_page[r_label == C_TEXT], minlength=P
-                )
-            else:
-                ntext_page = np.zeros(P, dtype=np.int64)
-            take_cols = []
-            fallback = []
-            for t in cplx_pages:
-                if ntext_page[t] >= 2:
-                    ent = page_gutter_cache.get(int(offsets[t]))
-                    if ent is None or ent[1]:
-                        fallback.append(int(t))
-                        continue
-                take_cols.append(int(t))
-            if take_cols:
-                cols_df = _emit_cols(
-                    take_cols, r_lo, r_hi, starts, counts, r_label,
-                    band, r_page, lines_np, stripped_np, line_start,
-                    lstr_len, s_len, raw_len, gutter_cache, pdf, cfg,
-                )
-            pages_iter = np.asarray(fallback, dtype=np.int64)
-        else:
-            pages_iter = cplx_pages
-    else:
-        gutter_cache = {}
-        page_gutter_cache = {}
-        cols_df = None
-        pages_iter = np.arange(P)
+            for jj, g in found:
+                if g:
+                    gutter_cache[int(st_e[sel[jj]])] = (None, None, g)
+            if sheared:
+                wp = [len(pr) for _jj, _sh, pr in sheared]
+                pgrid = np.zeros((len(sheared), max(wp)), dtype=np.int64)
+                for r, (_jj, _sh, pr) in enumerate(sheared):
+                    pgrid[r, : len(pr)] = pr
+                for (jj, sh, pr), g in zip(
+                    sheared, _select_gutters_batch(pgrid, wp, cfg)
+                ):
+                    if g:
+                        gutter_cache[int(st_e[sel[jj]])] = (sh, pr, g)
+    complex_page = np.zeros(P, dtype=bool)
+    complex_page[page[list(gutter_cache)]] = True
 
-    for t in pages_iter:
-        if tool_page[t]:
-            spans = []
-            for i in range(offsets[t], offsets[t + 1]):
-                if s_len[i] > 0:
-                    cs = int(line_start[i] + lstr_len[i])
-                    spans.append(
-                        (len(spans), RT_TOOL, 0, cs, cs + int(s_len[i]), stripped_np[i])
-                    )
-            if want_diag:
-                diag_rows.append(
-                    (int(n_per[t]), len(spans), 1 if spans else 0, 1, 0.0, False, 100.0, False, False)
-                )
-            else:
-                for row in spans:
-                    span_rows.append((t,) + row)
-            continue
-        regions = [
-            [
-                _CODE_RT[reg_label[r]],
-                int(band[starts[r]]),
-                int(starts[r]),
-                0,
-                range(int(starts[r]), int(starts[r] + counts[r])),
-            ]
-            for r in range(r_lo[t], r_hi[t])
-        ]
-        res = _emit_page(
-            regions,
-            int(n_per[t]),
-            float(ratio[t]),
-            bool(used_b[t]),
-            lines_np,
-            stripped_np,
-            line_start,
-            lstr_len,
-            s_len,
-            raw_len,
-            cfg,
-            want_diag,
-            gutter_cache,
-            page_ctx=(int(offsets[t]), cls, active),
-            page_gutter_cache=page_gutter_cache,
+    # ---- §6p page columns (return_boxes_of_images_by_order_of_reading_
+    # new analog, utils/__init__.py:1599-2255): a complex page with >= 2
+    # text blocks detects gutters over the UNION ink profile of its
+    # text-block lines, batched per chunk of pages. A page with page
+    # gutters is in page-column mode: page -> (text width, gutters)
+    page_cols: dict[int, tuple] = {}
+    txt_r = np.flatnonzero((reg_label == C_TEXT) & complex_page[r_page])
+    txt_r = txt_r[np.bincount(r_page[txt_r], minlength=P)[r_page[txt_r]] >= 2]
+    if len(txt_r):
+        st_r, cn_r, pg_r = starts[txt_r], counts[txt_r], r_page[txt_r]
+        upage, ufirst = np.unique(pg_r, return_index=True)
+        pw = np.maximum.reduceat(_seg_reduce(np.maximum, raw_len, st_r, cn_r), ufirst)
+        ubound = np.append(ufirst, len(pg_r))
+        for a, b in _grid_chunks(np.add.reduceat(cn_r, ufirst), pw):
+            rs = slice(ubound[a], ubound[b])
+            W = int(pw[a:b].max())
+            li = _line_ids(st_r[rs], cn_r[rs])
+            rows_nz, cols_nz = np.nonzero(_ink_grid(lines_np, raw_len, li, W))
+            slot = np.repeat(np.searchsorted(upage[a:b], pg_r[rs]), cn_r[rs])
+            prof = np.bincount(
+                slot[rows_nz] * W + cols_nz, minlength=(b - a) * W
+            ).reshape(b - a, W)
+            found = zip(
+                upage[a:b].tolist(),
+                pw[a:b].tolist(),
+                _select_gutters_batch(prof, pw[a:b], cfg),
+            )
+            for p, w, g in found:
+                if g:
+                    page_cols[p] = (w, g)
+    pm_page = np.zeros(P, dtype=bool)
+    pm_page[list(page_cols)] = True
+    if page_cols:
+        # §6p band recompute: a separator whose ink stays inside ONE
+        # page column (mother/child containment, utils/__init__.py:
+        # 213-297) no longer advances the band counter
+        local = np.zeros(n, dtype=bool)
+        for i in np.flatnonzero(pm_page[page] & active & (cls == C_SEP)).tolist():
+            g1 = [g[1] for g in page_cols[int(page[i])][1]]
+            a = lstr_len[i]
+            local[i] = np.searchsorted(g1, a) == np.searchsorted(g1, a + s_len[i] - 1)
+        band = band - page_excl(local)
+
+    # ---- emission: pages without column splits (~99%) and tool pages
+    # (one pseudo-region of all lines) run the fully vectorized
+    # _emit_fast; column pages (block gutters or §6p page columns) run
+    # _emit_cols. Both finish in the shared _emit_core engine.
+    fr = ~complex_page[r_page] & ~tool_page[r_page]
+    tp = np.flatnonzero(tool_page & (n_per > 0))
+    parts = [
+        _emit_fast(
+            np.concatenate([starts[fr], firsts[tp]]),
+            np.concatenate([counts[fr], n_per[tp]]),
+            np.concatenate([reg_label[fr], np.full(len(tp), C_TOOL, np.int8)]),
+            np.concatenate([band[starts[fr]], np.zeros(len(tp), np.int64)]),
+            np.concatenate([r_page[fr], tp]),
+            stripped_np, line_start + lstr_len, s_len, lstr_len, cfg,
         )
-        if want_diag:
-            diag_rows.append(res + (bool(was_enh[t]),))
-        else:
-            for row in res:
-                span_rows.append((t,) + row)
+    ]
+    if complex_page.any():
+        parts.append(_emit_cols(
+            np.flatnonzero(complex_page), r_lo, r_hi, starts, counts,
+            reg_label, band, lines_np, stripped_np, line_start, lstr_len,
+            s_len, raw_len, gutter_cache, page_cols, pm_page, cfg,
+        ))
+    parts = [p for p in parts if p is not None]
 
     if want_diag:
-        out = pd.DataFrame(
-            diag_rows,
-            columns=[
-                "n_lines",
-                "n_spans",
-                "n_regions",
-                "max_columns",
-                "slope",
-                "is_deskewed",
-                "agreement_ratio",
-                "used_binarized",
-                "was_enhanced",
-            ],
+        # SPEC §11 per-page reductions over the same emission
+        n_spans = np.zeros(P, dtype=np.int64)
+        n_regions = np.zeros(P, dtype=np.int64)
+        for p in parts:
+            n_spans += np.bincount(p["page"], minlength=P)
+            np.maximum.at(n_regions, p["page"], p["region_seq"] + 1)
+        max_cols = np.ones(P, dtype=np.int64)
+        for st, (_sh, _pr, g) in gutter_cache.items():
+            t = int(page[st])
+            max_cols[t] = max(max_cols[t], len(g) + 1)
+        for t, (_w, g) in page_cols.items():
+            max_cols[t] = len(g) + 1
+        # the slope fit pools the TEXT blocks NOT split into columns
+        fit = (
+            (reg_label == C_TEXT)
+            & ~tool_page[r_page]
+            & ~pm_page[r_page]
+            & ~np.isin(starts, list(gutter_cache))
         )
-        out.insert(0, "conv_id", pdf["conv_id"].to_numpy())
-        out.insert(1, "turn_idx", pdf["turn_idx"].to_numpy())
+        slope = _pooled_slopes(starts[fit], counts[fit], r_page[fit], lstr_len, P)
+        out = pd.DataFrame(
+            {
+                "conv_id": pdf["conv_id"].to_numpy(),
+                "turn_idx": pdf["turn_idx"].to_numpy(),
+                "n_lines": n_per,
+                "n_spans": n_spans,
+                "n_regions": n_regions,
+                "max_columns": max_cols,
+                "slope": slope,
+                "is_deskewed": np.abs(slope) >= cfg.slope_threshold,
+                # tool pages keep the constant row of SPEC §1
+                "agreement_ratio": np.where(tool_page, 100.0, ratio),
+                "used_binarized": used_b & ~tool_page,
+                "was_enhanced": was_enh,
+            }
+        )
         return out
 
-    # columnar construction: zip-transpose + typed arrays skips
-    # pandas' slow mixed-type row conversion path
-    if span_rows:
-        tt, sidx, rtyp, rseq, cs, ce, txt = zip(*span_rows)
-        ti = np.asarray(tt, dtype=np.int64)
-        out = pd.DataFrame(
+    conv_vals = pdf["conv_id"].to_numpy()
+    turn_vals = pdf["turn_idx"].to_numpy()
+    frames = [
+        pd.DataFrame(
             {
-                "conv_id": pdf["conv_id"].to_numpy()[ti],
-                "turn_idx": pdf["turn_idx"].to_numpy()[ti],
-                "span_idx": np.asarray(sidx, dtype=np.int64),
-                "region_type": np.asarray(rtyp, dtype=object),
-                "region_seq": np.asarray(rseq, dtype=np.int64),
-                "char_start": np.asarray(cs, dtype=np.int64),
-                "char_end": np.asarray(ce, dtype=np.int64),
-                "text": np.asarray(txt, dtype=object),
+                "conv_id": conv_vals[p["page"]],
+                "turn_idx": turn_vals[p["page"]],
+                **{c: p[c] for c in SPAN_COLUMNS},
             }
         )
-    else:
-        out = pd.DataFrame(
-            {
-                "conv_id": pd.Series([], dtype="object"),
-                "turn_idx": pd.Series([], dtype="int64"),
-                "span_idx": pd.Series([], dtype="int64"),
-                "region_type": pd.Series([], dtype="object"),
-                "region_seq": pd.Series([], dtype="int64"),
-                "char_start": pd.Series([], dtype="int64"),
-                "char_end": pd.Series([], dtype="int64"),
-                "text": pd.Series([], dtype="object"),
-            }
-        )
-    if as_frames:
-        frames = []
-        if fast_df is not None and len(fast_df):
-            frames.append(fast_df)
-        if cols_df is not None and len(cols_df):
-            frames.append(cols_df)
-        if len(out):
-            frames.append(out)
-        return frames
-    done = [
-        f
-        for f in (fast_df, cols_df, out)
-        if f is not None and len(f)
+        for p in parts
     ]
-    if not done:
-        return out
-    return done[0] if len(done) == 1 else pd.concat(done, ignore_index=True)
+    if as_frames:
+        return frames
+    if len(frames) == 1:
+        return frames[0]
+    if frames:
+        return pd.concat(frames, ignore_index=True)
+    return pd.DataFrame(
+        {
+            "conv_id": pd.Series([], dtype="object"),
+            "turn_idx": pd.Series([], dtype="int64"),
+            "span_idx": pd.Series([], dtype="int64"),
+            "region_type": pd.Series([], dtype="object"),
+            "region_seq": pd.Series([], dtype="int64"),
+            "char_start": pd.Series([], dtype="int64"),
+            "char_end": pd.Series([], dtype="int64"),
+            "text": pd.Series([], dtype="object"),
+        }
+    )
 
 
-# A/B switch for the batched column-page emission (_emit_cols): tests
-# force it off to drive every complex page through the per-page
-# _emit_page walk and assert bit-identical output
-_EMIT_COLS = True
+# cell budget of one batched profile grid chunk (rows x max width)
+_GRID_CELLS = 16384 * 192
+
+
+def _grid_chunks(rows, widths):
+    """Yield (lo, hi) bounds of consecutive items whose row total times
+    maximum width stays within _GRID_CELLS (at least one item each)."""
+    lo = tot = wmax = 0
+    for i, (r, w) in enumerate(zip(rows.tolist(), widths.tolist())):
+        if i > lo and (tot + r) * max(wmax, w) > _GRID_CELLS:
+            yield lo, i
+            lo, tot, wmax = i, 0, 0
+        tot += r
+        wmax = max(wmax, w)
+    if lo < len(rows):
+        yield lo, len(rows)
+
+
+def _seg_reduce(ufunc, values, st, cn):
+    """``ufunc.reduceat`` over the line segments [st, st + cn), cn >= 1;
+    the sentinel pad keeps st + cn == len(values) a legal index."""
+    idx = np.empty(2 * len(st), dtype=np.int64)
+    idx[0::2] = st
+    idx[1::2] = st + cn
+    return ufunc.reduceat(np.concatenate([values, np.zeros(1, values.dtype)]), idx)[0::2]
+
+
+def _line_ids(st, cn):
+    """Concatenated line indices of the segments [st, st + cn)."""
+    first = np.cumsum(cn) - cn
+    return np.repeat(st - first, cn) + np.arange(int(cn.sum()), dtype=np.int64)
+
+
+def _ink_grid(lines_np, raw_len, li, W):
+    """(len(li), W) ink mask of lines ``li``: char != ' ' inside the
+    line. A NUL character is ink; the padding past a line's end is not."""
+    grid = lines_np[li].astype(f"U{W}").view(np.uint32).reshape(len(li), W)
+    return (grid != 32) & (np.arange(W, dtype=np.int64)[None, :] < raw_len[li][:, None])
+
+
+def _pooled_slopes(st, cn, pg, lead, P):
+    """SPEC §11 deskew slope per page: least-squares slope of leading
+    indent vs line index within its block, pooled over the blocks
+    (st, cn) of page pg (cv2.fitLine analog, utils/__init__.py:331-332);
+    0.0 below 2 lines or at zero variance. Pages with equal line counts
+    share (m, N) row reductions, which numpy sums per row exactly as it
+    sums a 1-D array of the same values."""
+    slope = np.zeros(P, dtype=np.float64)
+    li = _line_ids(st, cn)
+    x = (np.arange(len(li)) - np.repeat(np.cumsum(cn) - cn, cn)).astype(np.float64)
+    y = lead[li].astype(np.float64)
+    cnt = np.bincount(np.repeat(pg, cn), minlength=P)
+    first = np.cumsum(cnt) - cnt
+    for N in np.unique(cnt[cnt >= 2]).tolist():
+        ps = np.flatnonzero(cnt == N)
+        idx = first[ps][:, None] + np.arange(N)
+        ax, ay = x[idx], y[idx]
+        dx = ax - (ax.sum(axis=1) / N)[:, None]
+        var = (dx * dx).sum(axis=1)
+        cov = (dx * (ay - (ay.sum(axis=1) / N)[:, None])).sum(axis=1)
+        pos = var > 0
+        slope[ps[pos]] = cov[pos] / var[pos]
+    return slope
+
 
 # reading-order type group per line class (SPEC §7)
 _TG_LUT = np.full(16, 9, dtype=np.int8)
@@ -1077,13 +867,13 @@ _TG_LUT[C_MARG] = 2
 _TG_LUT[C_SEP] = 3
 
 
-def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
-    """Shared array engine for SPEC §§8,9,10 over ORDERED regions and
-    their span arrays: the §8 drop-capital merge and the §9
-    overlap-argmax fragment adherence run as array patches, span-less
-    regions vanish, regions and spans number per page, span fields
-    gather into the output frame — numpy throughout except the (rare)
-    per-merge patch loops.
+def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, cfg):
+    """The span-emission engine, SPEC §§8-10 over ORDERED regions and
+    their span arrays: the §8 drop-capital merge, the §9L curved-line
+    split and the §9 overlap-argmax fragment adherence run as array
+    patches, span-less regions vanish, regions and spans number per
+    page — numpy throughout except the (rare) per-patch loops. Returns
+    the span columns plus each span's page index ("page"), or None.
 
     Per-region (in final reading order): lb (class codes), pg (page
     ids, ascending), bd (bands). Per-span (grouped by region, ascending
@@ -1102,7 +892,7 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
     dc_idx = np.flatnonzero(lb == C_DROPCAP)
     for i in dc_idx:
         if kept_per_region[i] == 0:
-            continue  # span-less dropcap: absent from the page walk
+            continue  # span-less dropcap: absent from the region list
         j = i + 1
         while j < R and kept_per_region[j] == 0:
             j += 1
@@ -1137,14 +927,48 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
             cs[pos] = dcs
             spn_len[pos] += dlen
 
+    # §9L curved-line split (-cl mode): long TEXT-region spans subdivide
+    # at the valleys of their own ink profile, before §9 adherence. A
+    # region whose split leaves fragments only is frozen: it keeps its
+    # unsplit spans and skips §9 adherence.
+    frozen = np.zeros(R, dtype=bool)
+    if cfg.enable_line_split:
+        pieces = {}
+        long_spans = (spn_len >= cfg.line_split_min_len) & (lb[rl] == C_TEXT)
+        for p in np.flatnonzero(long_spans).tolist():
+            sp = (int(cs[p]), int(ce[p]), texts[p], int(cola[p]), int(colb[p]))
+            got = _split_long_spans([sp], cfg)
+            if len(got) > 1:
+                pieces[p] = got
+        if pieces:
+            big = spn_len > cfg.small_fragment_max_len
+            for p, got in pieces.items():
+                big[p] = any(b - a > cfg.small_fragment_max_len for a, b, *_ in got)
+            frozen[rl[list(pieces)]] = True
+            frozen[rl[big]] = False
+            pieces = {p: got for p, got in pieces.items() if not frozen[rl[p]]}
+        if pieces:
+            rep = np.ones(len(rl), dtype=np.int64)
+            rep[list(pieces)] = [len(got) for got in pieces.values()]
+            at = np.cumsum(rep) - rep
+            rl, cs, ce, texts, spn_len, cola, colb = (
+                np.repeat(a, rep) for a in (rl, cs, ce, texts, spn_len, cola, colb)
+            )
+            for p, got in pieces.items():
+                for q, (a, b, text, ca, cb) in enumerate(got, int(at[p])):
+                    cs[q], ce[q], texts[q], cola[q], colb[q] = a, b, text, ca, cb
+                    spn_len[q] = b - a
+
     # §9 overlap-argmax fragment adherence (SPEC §9), as a patch over
     # the span arrays: fragments in TEXT regions merge into the big
     # span with maximal column overlap (ties: index-nearest, then
     # earliest); fragment spans are then excluded before numbering.
     # The merged dropcap span keeps the TARGET's column range (cola/
-    # colb are never patched), matching the per-page walk.
+    # colb are never patched), as in the oracle.
     drop_span = np.zeros(len(rl), dtype=bool)
-    frag_mask = (spn_len <= cfg.small_fragment_max_len) & (lb[rl] == C_TEXT)
+    frag_mask = (
+        (spn_len <= cfg.small_fragment_max_len) & (lb[rl] == C_TEXT) & ~frozen[rl]
+    )
     if frag_mask.any():
         uregs = np.unique(rl[frag_mask])
         ua0 = np.searchsorted(rl, uregs)
@@ -1209,103 +1033,94 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
     for code, rt in _CODE_RT.items():
         rt_lut[code] = rt
     rt_lut[C_DROPCAP] = RT_DROPCAP  # unmerged dropcaps keep the spec type
-    conv_vals = pdf["conv_id"].to_numpy()
-    turn_vals = pdf["turn_idx"].to_numpy()
-    return pd.DataFrame(
-        {
-            "conv_id": conv_vals[span_page],
-            "turn_idx": turn_vals[span_page],
-            "span_idx": span_idx,
-            "region_type": rt_lut[lb[rl]],
-            "region_seq": region_seq[rl],
-            "char_start": cs,
-            "char_end": ce,
-            "text": texts,
-        }
-    )
+    return {
+        "page": span_page,
+        "span_idx": span_idx,
+        "region_type": rt_lut[lb[rl]],
+        "region_seq": region_seq[rl],
+        "char_start": cs,
+        "char_end": ce,
+        "text": texts,
+    }
 
 
 def _emit_fast(
     fr_start, fr_count, fr_label, fr_band, fr_page,
-    pdf, strp_np, cstart, s_len, lead, cfg,
+    strp_np, cstart, s_len, lead, cfg,
 ):
-    """Array-native span emission for column-free regions: sort regions
-    by (page, band, type-group, first_line), derive one span per
-    non-blank line, hand off to the shared ``_emit_core`` engine."""
+    """Fully vectorized front end of ``_emit_core`` for column-free
+    regions: sort regions by (page, band, type-group, first_line) and
+    derive one span per non-blank line."""
     order = np.lexsort((fr_start, _TG_LUT[fr_label], fr_band, fr_page))
-    st = fr_start[order].astype(np.int64)
     cn = fr_count[order].astype(np.int64)
-    pg = fr_page[order].astype(np.int64)
-    bd = fr_band[order].astype(np.int64)
-    lb = fr_label[order]
-
-    total = int(cn.sum())
-    if total == 0:
-        return None
-    reg_first = np.cumsum(cn) - cn
-    line_ids = np.repeat(st - reg_first, cn) + np.arange(total, dtype=np.int64)
-    reg_of_line = np.repeat(np.arange(len(st), dtype=np.int64), cn)
+    line_ids = _line_ids(fr_start[order].astype(np.int64), cn)
     keep = s_len[line_ids] > 0
     li = line_ids[keep]
-    rl = reg_of_line[keep]
     if len(li) == 0:
         return None
+    rl = np.repeat(np.arange(len(cn), dtype=np.int64), cn)[keep]
     cs = cstart[li]
     spn = s_len[li].copy()
     return _emit_core(
-        lb, pg, bd, rl,
+        fr_label[order], fr_page[order].astype(np.int64),
+        fr_band[order].astype(np.int64), rl,
         cs.copy(), cs + spn, strp_np[li], spn,
-        lead[li], lead[li] + spn,
-        pdf, cfg,
+        lead[li], lead[li] + spn, cfg,
     )
 
 
 def _emit_cols(
-    pages, r_lo, r_hi, starts, counts, r_label, band, r_page,
+    pages, r_lo, r_hi, starts, counts, r_label, band,
     lines_np, stripped_np, line_start, lstr_len, s_len, raw_len,
-    gutter_cache, pdf, cfg,
+    gutter_cache, page_cols, pm_page, cfg,
 ):
-    """Array-native span emission for COLUMN pages without page-gutter
-    mode (SPEC §6 column split + §6m marginalia + §§7-10) — the
-    widened fast path: ~96% of complex pages are block-gutter-only and
-    previously walked ``_emit_page`` one page at a time.
+    """Front end of ``_emit_core`` for COLUMN pages (SPEC §6 column
+    split, §6m marginalia, §6p page columns).
 
-    Guttered text regions expand into per-column sub-regions; the
-    column piece trim runs as ONE batched searchsorted over the
-    chunk-gridded non-whitespace coordinates (exact ``str.strip()``
-    parity via _WS_LUT) instead of per-piece slice+lstrip+rstrip;
-    plain regions reuse the line-span arrays; everything merges into
-    one region table ordered by (page, band, type-group, first, col)
-    and finishes in the shared ``_emit_core`` engine. Bit-identical to
-    the per-page walk (A/B-fuzzed in tests/test_kernel_oracle.py)."""
+    On a page in §6p page-column mode every TEXT region splits by the
+    page gutters (width = page text width, no shear) and every other
+    region sits in the page column holding its first ink; elsewhere
+    TEXT regions with block gutters split by those. Guttered regions
+    expand into per-column sub-regions; the column piece trim runs as
+    ONE batched searchsorted over the chunk-gridded non-whitespace
+    coordinates (exact ``str.strip()`` parity via _WS_LUT); plain
+    regions reuse the line-span arrays. Regions order by (page, band,
+    type-group, first, col), or column-major (page, col, band,
+    type-group, first) on page-column pages."""
     K = 1 + int(raw_len.max()) if len(raw_len) else 1
 
     # --- region tables: plain regions (one row) vs guttered text ---
     rg_lab, rg_bd, rg_first, rg_col, rg_pg = [], [], [], [], []
     a_start, a_count = [], []  # plain regions, parallel to their rows
     gregs = []  # (start, count, shifts, gutters, w, band, page)
-    for t in pages:
+    for t in pages.tolist():
+        pm = page_cols.get(t)
         for r in range(r_lo[t], r_hi[t]):
             st_r = int(starts[r])
             cn_r = int(counts[r])
             lab = int(r_label[r])
             bd_r = int(band[st_r])
+            if lab == C_TEXT and pm is not None:
+                gregs.append((st_r, cn_r, None, pm[1], pm[0], bd_r, t))
+                continue
             ent = gutter_cache.get(st_r) if lab == C_TEXT else None
-            if ent is not None and ent[2]:
+            if ent is not None:
                 shifts, sh_prof, gutters = ent
                 if shifts is not None:
                     w = len(sh_prof)
                 else:
                     w = int(raw_len[st_r : st_r + cn_r].max())
-                gregs.append((st_r, cn_r, shifts, gutters, w, bd_r, int(t)))
-            else:
-                rg_lab.append(lab)
-                rg_bd.append(bd_r)
-                rg_first.append(st_r)
-                rg_col.append(0)
-                rg_pg.append(int(t))
-                a_start.append(st_r)
-                a_count.append(cn_r)
+                gregs.append((st_r, cn_r, shifts, gutters, w, bd_r, t))
+                continue
+            rg_lab.append(lab)
+            rg_bd.append(bd_r)
+            rg_first.append(st_r)
+            # page column: the number of page gutters left of the first ink
+            lead = lstr_len[st_r]
+            rg_col.append(0 if pm is None else sum(g1 < lead for _g0, g1 in pm[1]))
+            rg_pg.append(t)
+            a_start.append(st_r)
+            a_count.append(cn_r)
 
     # --- guttered regions: batched column piece extraction ---------------
     pair_meta = []  # per (region, col): (greg_ord, col, a, b)
@@ -1314,9 +1129,7 @@ def _emit_cols(
         g_count = np.asarray([g[1] for g in gregs], dtype=np.int64)
         g_lineoff = np.cumsum(g_count) - g_count
         Lg = int(g_count.sum())
-        li_g = np.repeat(g_start - g_lineoff, g_count) + np.arange(
-            Lg, dtype=np.int64
-        )
+        li_g = _line_ids(g_start, g_count)
         shift_flat = np.zeros(Lg, dtype=np.int64)
         for go, (st_r, cn_r, shifts, _g, _w, _b, _t) in enumerate(gregs):
             if shifts is not None:
@@ -1398,7 +1211,7 @@ def _emit_cols(
         pair_maxlen = np.zeros(len(pair_meta), dtype=np.int64)
         np.maximum.at(pair_maxlen, spB, lenB)
         # §6m projection marginalia + sub-region rows (non-empty pairs
-        # only, matching the per-page col_entries)
+        # only, as the oracle's col_entries)
         rel = round(cfg.marginalia_width_frac * 100)
         pair_row = np.full(len(pair_meta), -1, dtype=np.int64)
         p_at = 0
@@ -1436,7 +1249,15 @@ def _emit_cols(
     fi0 = np.asarray(rg_first, dtype=np.int64)
     co0 = np.asarray(rg_col, dtype=np.int64)
     pg0 = np.asarray(rg_pg, dtype=np.int64)
-    order = np.lexsort((co0, fi0, _TG_LUT[lb0], bd0, pg0))
+    tg0 = _TG_LUT[lb0]
+    pm = pm_page[pg0]
+    order = np.lexsort((
+        np.where(pm, fi0, co0),
+        np.where(pm, tg0, fi0),
+        np.where(pm, bd0, tg0),
+        np.where(pm, co0, bd0),
+        pg0,
+    ))
     new_of_old = np.empty(len(rg_lab), dtype=np.int64)
     new_of_old[order] = np.arange(len(rg_lab), dtype=np.int64)
 
@@ -1480,7 +1301,7 @@ def _emit_cols(
         lb0[order], pg0[order], bd0[order],
         sp_rl[sorder], sp_cs[sorder].copy(), sp_ce[sorder].copy(),
         sp_tx[sorder], sp_ln[sorder].copy(), sp_ca[sorder], sp_cb[sorder],
-        pdf, cfg,
+        cfg,
     )
 
 
@@ -1555,331 +1376,6 @@ def _split_long_spans(spans, cfg: ExtractConfig):
     return out
 
 
-def _col_of(p: int, gutters) -> int:
-    """Column index of raw position p given page gutters: the number
-    of gutters entirely to its left (SPEC §6p)."""
-    c = 0
-    for _g0, g1 in gutters:
-        if g1 < p:
-            c += 1
-    return c
-
-
-def _emit_page(
-    regions, n, ratio, used_b,
-    raw, strp, lstart, lead, slen, rlen,
-    cfg: ExtractConfig, want_diag: bool, gutter_cache=None,
-    page_ctx=None, page_gutter_cache=None,
-):
-    """SPEC §§6-10 for one page: column split, span materialization,
-    reading order, drop-capital merge, small-fragment adherence,
-    emission. ``regions`` is [[rtype, band, first_line, col, lids]] with
-    batch-global line indices into the per-line feature arrays.
-    ``page_ctx`` = (page_first_line, cls_array, active_array) enables
-    the §6p page-column band recompute."""
-
-    def diag_or_spans(spans, n_regions, max_cols, slope):
-        if want_diag:
-            return (
-                n, len(spans), n_regions, max_cols, slope,
-                bool(abs(slope) >= cfg.slope_threshold), ratio, used_b,
-            )
-        return spans
-
-    # --- §6 pre-pass: per-block deskew + gutters (memoized) ---------------
-    block_res = {}  # rfirst -> (shifts, sh_prof, gutters)
-    n_text_blocks = 0
-    for rtype, rband, rfirst, _c, lids in regions:
-        if rtype != RT_TEXT:
-            continue
-        n_text_blocks += 1
-        if gutter_cache is not None and rfirst in gutter_cache:
-            block_res[rfirst] = gutter_cache[rfirst]
-            continue
-        shifts = None
-        sh_prof = None
-        if len(lids) >= cfg.min_block_lines:
-            A, B = _ls_slope_int([int(lead[i]) for i in lids])
-            if B > 0 and abs(A) >= cfg.slope_threshold * B:
-                res = _choose_shear(
-                    [_ink_row(raw[i]) for i in lids],
-                    [int(rlen[i]) for i in lids],
-                    [int(lead[i]) for i in lids],
-                    cfg,
-                )
-                if res is not None:
-                    _s_star, shifts, sh_prof = res
-        if shifts is not None:
-            gutters = _select_gutters(sh_prof, cfg)
-        elif len(lids) < cfg.min_block_lines:
-            gutters = []
-        else:
-            gutters = _find_gutters(raw, rlen, lids, cfg)
-        block_res[rfirst] = (shifts, sh_prof, gutters)
-
-    # --- §6p page-column mode (return_boxes_of_images_by_order_of_
-    # reading_new analog, utils/__init__.py:1599-2255): when >= 2 text
-    # blocks exist and any block shows column structure, detect gutters
-    # over the UNION ink profile of all text-block lines; if found, the
-    # whole page splits by the page gutters and regions order
-    # column-major ACROSS bands. -------------------------------------------
-    page_gutters = None
-    page_w = 0
-    if (
-        n_text_blocks >= 2
-        and any(g for (_s, _p, g) in block_res.values())
-        and page_gutter_cache is not None
-        and page_ctx is not None
-        and page_ctx[0] in page_gutter_cache
-    ):
-        # batched pre-pass already ran the union-profile valley scan
-        page_w, pg = page_gutter_cache[page_ctx[0]]
-        page_gutters = pg if pg else None
-    elif n_text_blocks >= 2 and any(g for (_s, _p, g) in block_res.values()):
-        all_lids = np.asarray(
-            [i for r in regions if r[0] == RT_TEXT for i in r[4]], dtype=np.int64
-        )
-        lens_pg = rlen[all_lids]
-        page_w = int(lens_pg.max()) if len(all_lids) else 0
-        if 0 < page_w <= 512:
-            grid = (
-                raw[all_lids]
-                .astype(f"U{page_w}")
-                .view(np.uint32)
-                .reshape(len(all_lids), page_w)
-            )
-            valid = (
-                np.arange(page_w, dtype=np.int64)[None, :] < lens_pg[:, None]
-            )
-            prof = ((grid != 32) & valid).sum(axis=0).astype(np.int64)
-            pg = _select_gutters(prof, cfg)
-            if pg:
-                page_gutters = pg
-        elif page_w > 512:
-            prof = np.zeros(page_w, dtype=np.int64)
-            for i in all_lids:
-                row = _ink_row(raw[i])
-                if len(row):
-                    prof[: len(row)] += row
-            pg = _select_gutters(prof, cfg)
-            if pg:
-                page_gutters = pg
-
-    # §6p band recompute + column assignment: a separator contained in
-    # ONE column (mother/child containment, utils/__init__.py:213-297)
-    # no longer advances the global band counter; every region gets the
-    # column holding its first line's first ink
-    if page_gutters is not None and page_ctx is not None:
-        page_first, cls_arr, active_arr = page_ctx
-        band_line = [0] * n
-        band = 0
-        run = 0
-        for k in range(n):
-            i = page_first + k
-            band_line[k] = band
-            if not active_arr[i]:
-                continue  # border lines: outside the page walk
-            if cls_arr[i] == C_BLANK:
-                run += 1
-                if run == cfg.band_blank_gap:
-                    band += 1
-                continue
-            run = 0
-            if cls_arr[i] == C_SEP:
-                a = int(lead[i])
-                b = a + int(slen[i])
-                if b > a and _col_of(a, page_gutters) != _col_of(b - 1, page_gutters):
-                    band += 1
-        for r in regions:
-            r[1] = band_line[r[2] - page_first]
-            r[3] = _col_of(int(lead[r[2]]), page_gutters)
-
-    # §6 column split + span materialization. Span tuples carry their
-    # within-line column range (col_a, col_b) for the §9 overlap-argmax
-    # adherence; emission drops the extra fields.
-    out_regions = []  # (rtype, band, first_line, col_idx, [(cs, ce, text, col_a, col_b)])
-    max_cols = 1
-    sx: list[int] = []
-    sy: list[int] = []
-
-    def strip_span(i):
-        cs = int(lstart[i] + lead[i])
-        ca = int(lead[i])
-        return (cs, cs + int(slen[i]), strp[i], ca, ca + int(slen[i]))
-
-    for rtype, rband, rfirst, _c, lids in regions:
-        if rtype == RT_TEXT:
-            if page_gutters is not None:
-                shifts, sh_prof, gutters = None, None, page_gutters
-            else:
-                shifts, sh_prof, gutters = block_res[rfirst]
-            if gutters:
-                max_cols = max(max_cols, len(gutters) + 1)
-                if page_gutters is not None:
-                    w = page_w
-                elif shifts is not None:
-                    w = len(sh_prof)
-                else:
-                    w = int(max(rlen[i] for i in lids))
-                segs = []
-                prev = 0
-                for g0, g1 in gutters:
-                    segs.append((prev, g0))
-                    prev = g1 + 1
-                segs.append((prev, w))
-                col_entries = []
-                for col, (a, b) in enumerate(segs):
-                    col_spans = []
-                    for k, i in enumerate(lids):
-                        sh = shifts[k] if shifts is not None else 0
-                        piece = raw[i][a + sh : b + sh]
-                        # single left scan + right scan (strip() +
-                        # lstrip() would walk the left edge twice)
-                        ls = piece.lstrip()
-                        if not ls:
-                            continue
-                        s = ls.rstrip()
-                        pl = len(piece) - len(ls)
-                        cs = int(lstart[i]) + a + sh + pl
-                        col_spans.append((cs, cs + len(s), s, a + pl, a + pl + len(s)))
-                    if col_spans:
-                        col_entries.append((col, a, b, col_spans))
-                # §6m projection-based marginalia (utils/marginals.py
-                # analog): a narrow, short-lined OUTER column is a
-                # marginalia region, not a text column
-                n_e = len(col_entries)
-                rel = round(cfg.marginalia_width_frac * 100)
-                for idx, (col, a, b, col_spans) in enumerate(col_entries):
-                    rt = RT_TEXT
-                    if n_e >= 2 and (idx == 0 or idx == n_e - 1):
-                        wd = b - a
-                        others = max(
-                            bb - aa
-                            for j, (_c, aa, bb, _s) in enumerate(col_entries)
-                            if j != idx
-                        )
-                        if (
-                            wd * 100 <= rel * w
-                            and 2 * wd <= others
-                            and all(
-                                len(sp[2]) <= cfg.marginalia_max_len
-                                for sp in col_spans
-                            )
-                        ):
-                            rt = RT_MARGINALIA
-                    out_regions.append([rt, rband, rfirst, col, col_spans])
-                continue
-            for k, i in enumerate(lids):
-                sx.append(k)
-                sy.append(int(lead[i]))
-            spans = [strip_span(i) for i in lids if slen[i] > 0]
-            if spans:
-                out_regions.append([RT_TEXT, rband, rfirst, 0, spans])
-        else:
-            spans = [strip_span(i) for i in lids if slen[i] > 0]
-            if spans:
-                out_regions.append([rtype, rband, rfirst, _c, spans])
-
-    slope = 0.0
-    if len(sx) >= 2:
-        ax = np.asarray(sx, dtype=np.float64)
-        ay = np.asarray(sy, dtype=np.float64)
-        mx = ax.sum() / len(ax)
-        my = ay.sum() / len(ay)
-        dx = ax - mx
-        var = float((dx * dx).sum())
-        if var > 0:
-            slope = float((dx * (ay - my)).sum()) / var
-
-    # §7 reading order; §7p: page-column mode orders column-major
-    # ACROSS bands (all of column 0 top-down, then column 1, ...)
-    tg = {RT_HEADER: 0, RT_TEXT: 1, RT_TOOL: 1, RT_TABLE: 1, "dropcap": 1, RT_MARGINALIA: 2, RT_SEPARATOR: 3}
-    if page_gutters is not None:
-        out_regions.sort(key=lambda r: (r[3], r[1], tg[r[0]], r[2]))
-    else:
-        out_regions.sort(key=lambda r: (r[1], tg[r[0]], r[2], r[3]))
-
-    # §8 drop-capital merge
-    merged = []
-    i = 0
-    while i < len(out_regions):
-        r = out_regions[i]
-        if (
-            r[0] == "dropcap"
-            and i + 1 < len(out_regions)
-            and out_regions[i + 1][0] == RT_TEXT
-            and out_regions[i + 1][1] == r[1]
-            and out_regions[i + 1][4]
-        ):
-            tgt = out_regions[i + 1]
-            dcs = r[4][0][0]
-            dtext = r[4][0][2]
-            fcs, fce, ftext, fca, fcb = tgt[4][0]
-            # merged span keeps the TARGET's column range (col ranges
-            # are per-line; the dropcap sits on its own line)
-            tgt[4][0] = (dcs, fce, dtext + ftext, fca, fcb)
-            merged.append(tgt)
-            i += 2
-            continue
-        if r[0] == "dropcap":
-            r[0] = RT_DROPCAP
-        merged.append(r)
-        i += 1
-
-    # §9 small-fragment adherence: overlap-argmax (the pairwise
-    # small-x-big overlap matrix of utils/__init__.py:923-948 in 1-D) —
-    # each fragment merges into the big span with maximal column
-    # overlap; ties break to the index-nearest, then earliest, big.
-    final_regions = []
-    for r in merged:
-        if r[0] != RT_TEXT:
-            final_regions.append(r)
-            continue
-        spans_r = r[4]
-        if cfg.enable_line_split:
-            spans_r = _split_long_spans(spans_r, cfg)  # §9L (-cl mode)
-        bigs = [
-            j for j, sp in enumerate(spans_r)
-            if len(sp[2]) > cfg.small_fragment_max_len
-        ]
-        if not bigs:
-            if spans_r:
-                final_regions.append(r)
-            continue
-        pre = {j: [] for j in bigs}
-        suf = {j: [] for j in bigs}
-        for j, sp in enumerate(spans_r):
-            if len(sp[2]) > cfg.small_fragment_max_len:
-                continue
-            best, bo, bd = bigs[0], -1, None
-            for i in bigs:
-                b = spans_r[i]
-                ov = max(0, min(sp[4], b[4]) - max(sp[3], b[3]))
-                dist = abs(j - i)
-                if ov > bo or (ov == bo and dist < bd):
-                    best, bo, bd = i, ov, dist
-            (pre if j < best else suf)[best].append(sp)
-        out_spans = []
-        for i in bigs:
-            cs, ce, text, ca, cb = spans_r[i]
-            if pre[i]:
-                text = " ".join(p[2] for p in pre[i]) + " " + text
-                cs = pre[i][0][0]
-            if suf[i]:
-                text = text + " " + " ".join(p[2] for p in suf[i])
-                ce = suf[i][-1][1]
-            out_spans.append((cs, ce, text, ca, cb))
-        r[4] = out_spans
-        final_regions.append(r)
-
-    # §10 emission
-    spans = []
-    for rs, r in enumerate(final_regions):
-        for sp in r[4]:
-            spans.append((len(spans), r[0], rs, sp[0], sp[1], sp[2]))
-    return diag_or_spans(spans, len(final_regions), max_cols, slope)
-
-
 # integerized gaussian weights per sigma (shared by spec with the
 # oracle: radius int(3s+0.5), w[k] = round(1e6 * exp(-k^2 / 2s^2)))
 _GAUSS_CACHE: dict = {}
@@ -1923,82 +1419,14 @@ def _smooth_profile(profile: np.ndarray, sigma: float) -> np.ndarray:
     return sm
 
 
-def _select_gutters(profile: np.ndarray, cfg: ExtractConfig):
-    """SPEC §6 valley machinery over an ink profile: smoothed
-    relative-depth valleys with stray tolerance and deepest-first
-    suppression (find_num_col + find_peaks analog,
-    utils/__init__.py:443-503, separate_lines.py:57-103)."""
-    w = len(profile)
-    if w < 2:
-        return []
-    # cheap structural pre-pass first: smoothing only runs when at
-    # least one run survives width/zero-anchor/position checks. A
-    # vectorized quick-reject (a qualifying run exists IFF some zero
-    # column has a <= stray neighbor) bails before any run extraction
-    # — most profiles reaching here (e.g. every sheared profile of a
-    # skewed single-column paragraph) have no such pair.
-    stray = cfg.gutter_max_stray_lines
-    pv = np.asarray(profile)
-    z = pv == 0
-    if not z.any():
-        return []
-    low = pv <= stray
-    if not ((z[:-1] & low[1:]) | (z[1:] & low[:-1])).any():
-        return []
-    # run extraction stays a pure-python scan: profiles are tiny and
-    # the numpy run-extraction chain (diff/flatnonzero/concat/cumsum)
-    # costs more in per-call dispatch than the loop saves
-    pv_l = pv.tolist()
-    lo_c = cfg.gutter_min_frac * w
-    hi_c = cfg.gutter_max_frac * w
-    pre = []
-    p = 0
-    while p < w:
-        if pv_l[p] <= stray:
-            q = p
-            has0 = pv_l[p] == 0
-            while q + 1 < w and pv_l[q + 1] <= stray:
-                q += 1
-                has0 = has0 or pv_l[q] == 0
-            if q - p + 1 >= 2 and has0 and lo_c <= (p + q) // 2 <= hi_c:
-                pre.append((p, q))
-            p = q + 1
-        else:
-            p += 1
-    if not pre:
-        return []
-    sm = _smooth_profile(profile, cfg.gutter_sigma)
-    max_s = int(sm.max())
-    if max_s == 0:
-        return []
-    rel_pct = int(round(cfg.gutter_rel_depth * 100))
-    peak_pct = int(round(cfg.gutter_peak_frac * 100))
-    kept = []
-    for a, b in pre:
-        depth = int(sm[a : b + 1].min())
-        if depth * 100 > rel_pct * max_s:
-            continue  # valley not deep enough relative to the peak
-        # two-sided prominence: a real gutter separates two ink PEAKS;
-        # the ragged tail of a block (only the longest line inks) has
-        # no right-side peak and is rejected
-        left_max = int(sm[:a].max()) if a > 0 else 0
-        right_max = int(sm[b + 1 :].max()) if b + 1 < w else 0
-        if min(left_max, right_max) * 100 < peak_pct * max_s:
-            continue
-        kept.append((depth, a, b))
-    # W6 suppression: keep the deepest max_columns-1 valleys, then
-    # restore positional order
-    kept.sort()
-    kept = kept[: cfg.max_columns - 1]
-    kept.sort(key=lambda t: t[1])
-    return [(a, b) for _, a, b in kept]
-
-
 def _select_gutters_batch(prof_grid: np.ndarray, widths, cfg: ExtractConfig):
-    """Batched `_select_gutters` over a (m, W) int64 profile grid whose
-    rows are zero-padded past each block's true width. Returns one
-    gutter list per row, bit-identical to
-    ``_select_gutters(prof_grid[r, :widths[r]], cfg)`` — the A/B fuzz
+    """SPEC §6 valley machinery (find_num_col + find_peaks analog,
+    utils/__init__.py:443-503, separate_lines.py:57-103), batched over
+    a (m, W) int64 profile grid whose rows are zero-padded past each
+    block's true width: smoothed relative-depth valleys with stray
+    tolerance, two-sided prominence and deepest-first suppression.
+    Returns one gutter list per row, equal to the oracle's
+    ``_select_gutters_naive(prof_grid[r, :widths[r]])`` — the A/B fuzz
     in tests/test_kernel_oracle.py asserts this. All stages (run
     extraction, gaussian smoothing, depth/prominence) run as grid ops;
     only the final W6 per-row suppression walks survivors in Python."""
@@ -2012,7 +1440,7 @@ def _select_gutters_batch(prof_grid: np.ndarray, widths, cfg: ExtractConfig):
     inw = colx < wds[:, None]
     z = (prof_grid == 0) & inw
     low = (prof_grid <= stray) & inw
-    # quick reject (scalar parity): a qualifying run exists only if
+    # quick reject: a qualifying run exists only if
     # some zero column has a <= stray neighbor
     cand = ((z[:, :-1] & low[:, 1:]) | (z[:, 1:] & low[:, :-1])).any(axis=1)
     rows = np.flatnonzero(cand)
@@ -2031,8 +1459,8 @@ def _select_gutters_batch(prof_grid: np.ndarray, widths, cfg: ExtractConfig):
     blk = rstart // (W + 1)
     a = rstart - blk * (W + 1)
     b = rend - blk * (W + 1)
-    # scalar filters: width >= 2, contains a zero, center within frac
-    # bounds of the block's true width (float compare, as scalar)
+    # run filters: width >= 2, contains a zero, center within frac
+    # bounds of the block's true width (float compare, as the oracle)
     keep = (b - a) >= 1
     zc = np.cumsum(z[rows], axis=1)
     zin = zc[blk, b] - np.where(a > 0, zc[blk, np.maximum(a - 1, 0)], 0)
@@ -2050,7 +1478,7 @@ def _select_gutters_batch(prof_grid: np.ndarray, widths, cfg: ExtractConfig):
     srows = np.unique(blk)  # indices into `rows` that still need smoothing
     rix = np.searchsorted(srows, blk)
     # batched integer gaussian smoothing: beyond-width entries are zero
-    # by construction, so convolving the padded row equals the scalar
+    # by construction, so convolving the padded row equals the
     # zero-padded convolution on [0, w)
     r, wts = _gauss_weights(cfg.gutter_sigma)
     P = prof_grid[rows[srows]]
@@ -2124,108 +1552,23 @@ def _ls_slope_int(leads) -> tuple[int, int]:
     return n * sky - sk * sy, n * sk2 - sk * sk
 
 
-def _choose_shear(ink_rows, lens, leads, cfg: ExtractConfig, nz=None):
-    """SPEC §6d deskew: shear-grid argmax (return_deskew_slop analog,
-    separate_lines.py:1605-1646, in 1-D). Candidates are the LS slope's
-    neighborhood plus 0; each candidate de-indents line k by
-    round(s*k) (normalized to min 0) and scores the sheared ink
-    profile's normalized variance (sharper columns = higher variance);
-    the first candidate with maximal score wins. Returns
-    (s_star, shifts, sheared_profile) when |s_star| >= slope_threshold,
-    else None."""
-    A, B = _ls_slope_int(leads)
-    if B <= 0 or abs(A) < cfg.slope_threshold * B:
-        return None
-    sls = A / B
-    n = len(lens)
-    cands = [0.0, sls - 0.5, sls - 0.25, sls, sls + 0.25, sls + 0.5]
-    lens_i = [int(lens[k]) for k in range(n)]
-    lens_a = np.asarray(lens_i, dtype=np.int64)
-    ks = np.arange(n, dtype=np.float64)
-    # flatten the block's ink cells ONCE (row, col of every inked
-    # position, masked by each line's true length — rows may be padded
-    # when they come from a fixed-width grid); each candidate's
-    # sheared profile is then a single bincount of (col - shift[row])
-    # instead of a per-line slice-add loop
-    if nz is not None:
-        # precomputed (row, col) ink coordinates, already length-masked
-        rows_nz, cols_nz = nz
-    elif isinstance(ink_rows, np.ndarray) and ink_rows.ndim == 2:
-        rows_nz, cols_nz = np.nonzero(ink_rows)
-        valid = cols_nz < lens_a[rows_nz]
-        rows_nz = rows_nz[valid]
-        cols_nz = cols_nz[valid]
-    else:
-        rl, cl = [], []
-        for k in range(n):
-            nz = np.flatnonzero(ink_rows[k][: lens_i[k]])
-            cl.append(nz)
-            rl.append(np.full(len(nz), k, dtype=np.int64))
-        rows_nz = np.concatenate(rl) if rl else np.zeros(0, dtype=np.int64)
-        cols_nz = (
-            np.concatenate(cl).astype(np.int64) if cl else np.zeros(0, np.int64)
-        )
-    # candidates with identical shift vectors score identically, so
-    # build each distinct shift vector's profile once (short blocks
-    # collapse most of the grid)
-    # np.rint == Python round on doubles (both half-to-even), so the
-    # shift vectors are bit-identical to a scalar round() loop.
-    # Candidates with identical shift vectors score identically, so
-    # distinct vectors are profiled once — and ALL distinct profiles
-    # come from ONE offset-bincount over the flattened ink cells.
-    raw_all = np.rint(np.asarray(cands)[:, None] * ks[None, :]).astype(np.int64)
-    sh_all = raw_all - raw_all.min(axis=1, keepdims=True)
-    seen: dict[bytes, int] = {}
-    cand_slot = []  # candidate index -> distinct-vector slot
-    slots = []
-    for ci in range(len(cands)):
-        key = sh_all[ci].tobytes()
-        slot = seen.get(key)
-        if slot is None:
-            slot = len(slots)
-            seen[key] = slot
-            slots.append(ci)
-        cand_slot.append(slot)
-    dist = sh_all[slots]  # (m, n)
-    wps = (lens_a[None, :] - dist).max(axis=1)
-    m = len(slots)
-    wmax = int(wps.max()) if m else 0
-    if wmax <= 0:
-        return None
-    # per-line col-shift: idx < (len - sh) <= wp for every inked cell,
-    # so slot c's counts all land inside its own [c*wmax, c*wmax+wp_c)
-    idx = cols_nz[None, :] - dist[:, rows_nz]
-    ok = idx >= 0
-    flat = (np.arange(m, dtype=np.int64)[:, None] * wmax + idx)[ok]
-    profs = np.bincount(flat, minlength=m * wmax).reshape(m, wmax)
-    svs = profs.sum(axis=1)
-    sv2s = np.einsum("ij,ij->i", profs, profs)
-    best = None  # (score, wp, s, slot)
-    for ci, s in enumerate(cands):
-        slot = cand_slot[ci]
-        wp = int(wps[slot])
-        if wp <= 0:
-            continue
-        score = wp * int(sv2s[slot]) - int(svs[slot]) ** 2  # pop var * wp^2
-        if best is None or score * best[1] * best[1] > best[0] * wp * wp:
-            best = (score, wp, s, slot)
-    if best is None or abs(best[2]) < cfg.slope_threshold:
-        return None
-    slot = best[3]
-    return best[2], dist[slot].tolist(), profs[slot, : best[1]]
-
-
 def _choose_shear_batch(specs, cfg: ExtractConfig):
-    """Batched `_choose_shear` over many blocks at once. ``specs`` is a
-    list of (A, B, lens, rows_loc, cols_loc) per block — A/B the EXACT
-    integer LS-slope fraction (python ints, so sls = A/B is the same
-    correctly-rounded double the scalar path computes), lens the line
-    lengths, rows/cols the length-masked ink coordinates. Returns one
-    scalar-path-identical result per block: the entire candidate grid
-    (6 per block) shears through ONE rint, ONE offset bincount and ONE
-    einsum; only the 6-way winner comparison (python ints — the
-    rational cross-product can exceed int64) walks blocks in Python.
-    A/B-fuzzed against the scalar path in tests/test_kernel_oracle.py."""
+    """SPEC §6d deskew shear grid (return_deskew_slop analog,
+    separate_lines.py:1605-1646, in 1-D), batched over many blocks.
+    Candidates are 0 plus the LS slope's +-0.5/+-0.25 neighborhood;
+    each de-indents line k by round(s*k) (normalized to min 0) and
+    scores the sheared ink profile's normalized variance; the first
+    maximal candidate wins. ``specs`` is a list of (A, B, lens,
+    rows_loc, cols_loc) per block — A/B the EXACT integer LS-slope
+    fraction (python ints, so sls = A/B is the correctly-rounded
+    double), lens the line lengths, rows/cols the length-masked ink
+    coordinates. Returns per block (s_star, shifts, sheared profile)
+    when |s_star| >= slope_threshold, else None. The candidate grid
+    shears through ONE rint, ONE offset bincount and ONE einsum; only
+    the 6-way winner comparison (python ints — the rational
+    cross-product can exceed int64) walks blocks in Python. A/B-fuzzed
+    against the oracle's ``_choose_shear_naive`` in
+    tests/test_kernel_oracle.py."""
     nb = len(specs)
     if nb == 0:
         return []
@@ -2305,37 +1648,3 @@ def _ink_row(s: str) -> np.ndarray:
     if not s:
         return np.zeros(0, dtype=bool)
     return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32) != 32
-
-
-def _find_gutters(raw, rlen, lids, cfg: ExtractConfig):
-    """SPEC §6 gutters, numpy ink profile over the block."""
-    contiguous = isinstance(lids, range) and lids.step == 1
-    if contiguous:
-        w = int(rlen[lids.start : lids.stop].max()) if len(lids) else 0
-    else:
-        w = int(max(rlen[i] for i in lids))
-    if w == 0:
-        return []
-    if contiguous:
-        # numpy's fixed-width unicode dtype IS a UTF-32 grid: one
-        # astype over just this block yields per-char codes (0-padded
-        # past each line's end) — no per-line encodes, no global grid
-        blk = raw[lids.start : lids.stop]
-        grid = blk.astype(f"U{w}").view(np.uint32).reshape(len(blk), w)
-        # padding past each line's end is masked by LENGTH, not by code
-        # 0 — a literal NUL character inside text is ink (matches the
-        # oracle's `ch != ' '` and the non-contiguous fallback)
-        lens = rlen[lids.start : lids.stop]
-        valid = np.arange(w, dtype=np.int64)[None, :] < lens[:, None]
-        profile = ((grid != 32) & valid).sum(axis=0)
-    else:
-        profile = np.zeros(w, dtype=np.int64)
-        for i in lids:
-            s = raw[i]
-            if s.isascii():
-                a = np.frombuffer(s.encode(), dtype=np.uint8)
-            else:
-                a = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-            if len(a):
-                profile[: len(a)] += a != 32
-    return _select_gutters(profile, cfg)

@@ -549,7 +549,8 @@ def _index_fs(spark, path: str):
 
 def _index_versions(spark, path: str) -> list[int]:
     """Sorted version numbers of ``v=<N>`` snapshot directories under
-    ``path`` (committed or not — commit status is decided by meta/)."""
+    ``path`` (committed or not — commit status is decided by
+    meta/_SUCCESS)."""
     fs, hpath, _ = _index_fs(spark, path)
     if not fs.exists(hpath):
         return []
@@ -581,7 +582,9 @@ def write_dedup_index(
 
     Snapshots are VERSIONED and committed atomically-enough for object
     stores: each write lands in a fresh ``path/v=<N>/`` directory
-    (N = max existing + 1) and is committed by writing ``meta/`` LAST,
+    (N = max existing + 1) and is committed by writing ``meta/`` LAST
+    (its ``_SUCCESS`` marker, which Spark's job commit writes after
+    every part file, is the commit point),
     after every data frame is fully written — so a crash mid-write
     leaves an uncommitted version directory that probes skip, never a
     new ``exact/`` silently paired with an old ``bands/``. ``meta/``
@@ -659,9 +662,10 @@ def incremental_dedup_indexed(
     parquet scans instead of a full re-shingle.
 
     The snapshot is resolved through its commit marker: the HIGHEST
-    ``v=<N>`` directory whose ``meta/`` exists is the current index
-    (meta is written last, so an uncommitted/torn version is invisible
-    here). Before probing, the recorded per-frame row counts are
+    ``v=<N>`` directory whose ``meta/_SUCCESS`` exists is the current
+    index (meta is written last and ``meta/`` itself appears when its
+    write job starts, so only the job-commit marker proves the version
+    committed; an uncommitted/torn version is invisible here). Before probing, the recorded per-frame row counts are
     checked against the frames on disk — a mismatch means the snapshot
     was tampered with or partially rewritten, and raises rather than
     silently under-flagging duplicates. Knob mismatch raises too (a
@@ -671,12 +675,12 @@ def incremental_dedup_indexed(
     fs, _, jvm = _index_fs(spark, index_path)
     vpath = None
     for v in reversed(_index_versions(spark, index_path)):
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_path}/v={v}/meta")):
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_path}/v={v}/meta/_SUCCESS")):
             vpath = f"{index_path}/v={v}"
             break
     if vpath is None:
         # pre-versioning flat layout (legacy snapshots): meta/ at top
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta")):
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta/_SUCCESS")):
             vpath = index_path
         else:
             raise ValueError(

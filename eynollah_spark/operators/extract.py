@@ -118,8 +118,9 @@ def _kernel_iter(bc_cfg, metrics=None):
             model = LineModel(bc_cfg.value if bc_cfg is not None else DEFAULT_CONFIG)
             _MODEL_CACHE[key] = model
         for pdf in batches:
-            # fast- and slow-path frames yield separately (no pandas
-            # concat/consolidation); downstream windows impose order
+            # the column-free and column-page frames yield separately
+            # (no pandas concat/consolidation); downstream windows
+            # impose order
             frames = analyze_turns_frames(pdf, model)
             if metrics is not None:
                 metrics["turns_in"].add(len(pdf))

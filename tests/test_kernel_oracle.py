@@ -718,17 +718,15 @@ def test_fuzz_diag_agreement_all_modes(text, role):
 
 @pytest.mark.parametrize("seed", [3, 17, 99])
 def test_select_gutters_batch_matches_scalar(seed):
-    """A/B fuzz: the grid-vectorized valley machinery must be
-    bit-identical per row to the scalar _select_gutters on randomized
+    """A/B fuzz: the grid-vectorized valley machinery must reproduce the
+    oracle's scalar _select_gutters_naive per row on randomized
     zero-padded profile grids (incl. all-zero rows, stray columns,
     degenerate widths 0/1, and flat-low plateaus)."""
     import numpy as np
 
     from eynollah_spark.config import ExtractConfig
-    from eynollah_spark.kernel.textpage import (
-        _select_gutters,
-        _select_gutters_batch,
-    )
+    from eynollah_spark.kernel.textpage import _select_gutters_batch
+    from eynollah_spark.oracle.reference import _select_gutters_naive
 
     rng = np.random.default_rng(seed)
     for cfg in (
@@ -752,23 +750,25 @@ def test_select_gutters_batch_matches_scalar(seed):
                 grid[r, :w] = row
             got = _select_gutters_batch(grid, widths, cfg)
             for r in range(m):
-                want = _select_gutters(grid[r, : int(widths[r])], cfg)
+                want = _select_gutters_naive(grid[r, : int(widths[r])].tolist(), cfg)
                 assert got[r] == want, (r, int(widths[r]), grid[r].tolist())
 
 
 @pytest.mark.parametrize("seed", [5, 23, 71])
 def test_choose_shear_batch_matches_scalar(seed):
     """A/B fuzz: the cross-block batched shear grid must reproduce the
-    scalar _choose_shear result (slope, shift vector, sheared profile)
-    for every block, including no-shear Nones, staggered columns, and
-    blocks whose candidates collapse to identical shift vectors."""
+    oracle's scalar _choose_shear_naive result (slope, shift vector,
+    sheared profile) for every block, including no-shear Nones,
+    staggered columns, and blocks whose candidates collapse to
+    identical shift vectors. Blocks are strings (ink = non-space after
+    staggered leading spaces), so leads and ink coordinates agree."""
     import numpy as np
 
     from eynollah_spark.config import ExtractConfig
-    from eynollah_spark.kernel.textpage import (
-        _choose_shear,
-        _choose_shear_batch,
-        _ls_slope_int,
+    from eynollah_spark.kernel.textpage import _choose_shear_batch
+    from eynollah_spark.oracle.reference import (
+        _choose_shear_naive,
+        _ls_slope_int_naive,
     )
 
     rng = np.random.default_rng(seed)
@@ -781,16 +781,25 @@ def test_choose_shear_batch_matches_scalar(seed):
         lens = rng.integers(1, w + 1, size=n)
         ink = rng.random((n, w)) < 0.4
         # staggered indent so many blocks pass the slope gate
-        leads = (np.arange(n) * float(rng.choice([0.0, 0.4, 1.0, 2.5]))
-                 + rng.integers(0, 3, size=n)).astype(np.int64)
-        A, B = _ls_slope_int([int(v) for v in leads])
+        stagger = (np.arange(n) * float(rng.choice([0.0, 0.4, 1.0, 2.5]))
+                   + rng.integers(0, 3, size=n)).astype(np.int64)
+        block = [
+            " " * int(stagger[k])
+            + "".join("x" if c else " " for c in ink[k, : lens[k]])
+            for k in range(n)
+        ]
+        leads = [len(ln) - len(ln.lstrip(" ")) for ln in block]
+        A, B = _ls_slope_int_naive(leads)
         if B <= 0 or abs(A) < cfg.slope_threshold * B:
             continue  # batch contract: caller only passes gated blocks
-        rows, cols = np.nonzero(ink)
-        keep = cols < lens[rows]
-        specs.append((A, B, lens, rows[keep], cols[keep]))
-        scalar.append(_choose_shear(ink, lens, leads, cfg))
+        rows = [k for k, ln in enumerate(block) for ch in ln if ch != " "]
+        cols = [c for ln in block for c, ch in enumerate(ln) if ch != " "]
+        specs.append((A, B, np.asarray([len(ln) for ln in block]),
+                      np.asarray(rows, dtype=np.int64),
+                      np.asarray(cols, dtype=np.int64)))
+        scalar.append(_choose_shear_naive(block, cfg))
     assert specs, "fuzz produced no gated blocks"
+    assert any(s is not None for s in scalar)
     got = _choose_shear_batch(specs, cfg)
     assert len(got) == len(scalar)
     for g, s in zip(got, scalar):
@@ -799,7 +808,7 @@ def test_choose_shear_batch_matches_scalar(seed):
             continue
         assert g is not None
         assert g[0] == s[0] and g[1] == s[1]
-        assert np.array_equal(g[2], s[2])
+        assert g[2].tolist() == s[2]
 
 
 def test_page_union_chunk_batching_matches_single_page():
@@ -833,6 +842,68 @@ def test_page_union_chunk_batching_matches_single_page():
     pd.testing.assert_frame_equal(batched, singles)
     # the fixture really exercises the column path
     assert (batched.groupby("conv_id")["region_seq"].nunique() > 1).any()
+
+
+def _assert_kernel_matches_oracle(text, role="user"):
+    """Spans AND all SPEC §11 diagnostics equal the oracle's; returns
+    the kernel spans."""
+    got = _kernel_spans([(text, role)])[0]
+    assert got == _oracle_spans(text, role)
+    pdf = pd.DataFrame(
+        {"conv_id": ["c"], "turn_idx": [0], "role": [role], "text": [text]}
+    )
+    g = page_diags_batch(pdf).iloc[0]
+    e = page_diag_naive(text, role)
+    for k in ("n_lines", "n_spans", "n_regions", "max_columns"):
+        assert e[k] == g[k], k
+    assert abs(e["slope"] - g["slope"]) < 1e-12
+    for k in ("is_deskewed", "used_binarized", "was_enhanced"):
+        assert e[k] == bool(g[k]), k
+    return got
+
+
+def test_wide_blocks_and_pages_match_oracle():
+    """Lines wider than 192 chars and pages wider than 512 chars take
+    the same column machinery as narrow ones: straight and sheared
+    two-column blocks split, a skewed block without a gutter stays one
+    column, and a wide two-block page splits column-major (§6p)."""
+    left, right = "a" * 120, "b" * 120
+
+    # straight 2-column block, 260 chars wide
+    straight = "\n".join([left + " " * 20 + right] * 4)
+    got = _assert_kernel_matches_oracle(straight)
+    assert [g[5] for g in got] == [left] * 4 + [right] * 4
+    assert {g[2] for g in got} == {0, 1}
+
+    # 2-column block skewed by 4 chars/line: the raw profile has no
+    # gutter, the sheared one has
+    skewed = "\n".join(" " * (4 * k) + left + " " * 16 + right for k in range(6))
+    got = _assert_kernel_matches_oracle(skewed)
+    assert [g[5] for g in got] == [left] * 6 + [right] * 6
+
+    # skewed single-column block of the same width: no gutter
+    words = " ".join(["lorem", "ipsum", "dolor", "sit", "amet"] * 9)[:255]
+    plain = [" " * k + words for k in range(6)]
+    got = _assert_kernel_matches_oracle("\n".join(plain))
+    assert [g[5] for g in got] == [ln.strip() for ln in plain]
+    assert {g[2] for g in got} == {0}
+
+    # two text blocks, 530 chars wide, sharing one page gutter, and a
+    # note whose first ink lies in the right page column
+    wl, wr = "c" * 250, "d" * 250
+    b1 = [left * 2 + "ccccc" + " " * 30 + right * 2 + "ddddd"] * 3
+    b2 = [wl + " " * 30 + wr] * 3
+    note = "[note: right]"
+    page = "\n".join(b1 + ["", ""] + b2 + [" " * 280 + note])
+    assert max(map(len, page.split("\n"))) > 512
+    got = _assert_kernel_matches_oracle(page)
+    texts = [g[5] for g in got]
+    # column-major across both bands: left column of b1 and b2 first;
+    # the note sorts into the right column
+    assert texts == (
+        [left * 2 + "ccccc"] * 3 + [wl] * 3
+        + [right * 2 + "ddddd"] * 3 + [wr] * 3 + [note]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -923,12 +994,13 @@ def test_enhancement_tool_pages_bypass():
 
 
 @pytest.mark.parametrize("seed", [7, 41, 113, 227])
-def test_emit_cols_matches_per_page_walk(seed):
-    """A/B fuzz: the batched column-page emission (_emit_cols) must be
-    bit-identical to the per-page _emit_page walk on randomized
-    multi-column corpora — same protocol as _select_gutters_batch.
-    Covers gutter splits, sheared blocks, marginalia relabels,
-    dropcaps, fragments and the empty-column edge."""
+def test_emit_cols_matches_per_page_walk(seed, monkeypatch):
+    """Fuzz: the batched emission must match the oracle's per-page walk
+    (analyze_turn_naive / page_diag_naive) on randomized multi-column
+    corpora, in span and diagnostics mode and with the §9L line split.
+    Covers block gutter splits, §6p page columns, sheared blocks,
+    marginalia relabels, dropcaps, fragments and the empty-column
+    edge; the corpus must exercise page columns, shear and marginalia."""
     import numpy as np
     import pandas as pd
 
@@ -971,16 +1043,56 @@ def test_emit_cols_matches_per_page_walk(seed):
             "text": texts,
         }
     )
-    for cfg in (ExtractConfig(), ExtractConfig(small_fragment_max_len=0)):
+
+    # spies: §6p page-column pages and sheared blocks the kernel saw
+    seen = {"page_cols": 0, "sheared": 0}
+    emit_cols, shear = textpage._emit_cols, textpage._choose_shear_batch
+
+    def spy_emit_cols(*args):
+        seen["page_cols"] += len(args[-3])
+        return emit_cols(*args)
+
+    def spy_shear(specs, cfg):
+        res = shear(specs, cfg)
+        seen["sheared"] += sum(r is not None for r in res)
+        return res
+
+    monkeypatch.setattr(textpage, "_emit_cols", spy_emit_cols)
+    monkeypatch.setattr(textpage, "_choose_shear_batch", spy_shear)
+
+    n_marg = 0
+    for cfg in (
+        ExtractConfig(),
+        ExtractConfig(small_fragment_max_len=0),
+        ExtractConfig(enable_line_split=True, line_split_min_len=8),
+    ):
         m = textpage.LineModel(cfg)
-        try:
-            textpage._EMIT_COLS = False
-            want = textpage.analyze_turns_batch(pdf, m)
-            textpage._EMIT_COLS = True
-            got = textpage.analyze_turns_batch(pdf, m)
-        finally:
-            textpage._EMIT_COLS = True
-        key = ["conv_id", "turn_idx", "span_idx"]
-        want = want.sort_values(key).reset_index(drop=True)
-        got = got.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_frame_equal(got, want)
+        got = {}
+        for t in textpage.analyze_turns_batch(pdf, m).itertuples(index=False):
+            got.setdefault(t.conv_id, []).append((
+                int(t.span_idx), t.region_type, int(t.region_seq),
+                int(t.char_start), int(t.char_end), t.text,
+            ))
+        diags = textpage.page_diags_batch(pdf, m).set_index("conv_id")
+        for row in pdf.itertuples(index=False):
+            want = [
+                (s.span_idx, s.region_type, s.region_seq, s.char_start,
+                 s.char_end, s.text)
+                for s in analyze_turn_naive(row.text, row.role, cfg)
+            ]
+            spans = sorted(got.get(row.conv_id, []))
+            assert spans == want, repr(row.text)
+            n_marg += sum(sp[1] == "marginalia" for sp in spans)
+            e = page_diag_naive(row.text, row.role, cfg)
+            g = diags.loc[row.conv_id]
+            for k in ("n_lines", "n_spans", "n_regions", "max_columns"):
+                assert e[k] == g[k], (k, repr(row.text))
+            assert abs(e["slope"] - g["slope"]) < 1e-12, repr(row.text)
+            for k in ("is_deskewed", "used_binarized", "was_enhanced"):
+                assert e[k] == bool(g[k]), (k, repr(row.text))
+            assert abs(e["agreement_ratio"] - g["agreement_ratio"]) < 1e-9
+    # non-vacuous: no "[note:" literal in the corpus, so every
+    # marginalia span is a §6m projection relabel
+    assert seen["page_cols"] > 0 and seen["sheared"] > 0 and n_marg > 0, (
+        seen, n_marg,
+    )

@@ -235,11 +235,13 @@ def test_incremental_dedup_indexed_matches_recompute(spark, sf_dir, tmp_path):
 
 
 def test_dedup_index_commit_marker_and_tamper_guard(spark, sf_dir, tmp_path):
-    """A snapshot version with no meta/ (crash before commit) is
-    invisible to probes — they keep reading the last committed
-    version; a committed snapshot whose frames were partially
+    """A snapshot version with no meta/ (crash before commit), or with
+    a meta/ part file but no _SUCCESS marker (crash while meta is
+    being written), is invisible to probes — they keep reading the
+    last committed version; a committed snapshot whose frames were partially
     rewritten (row counts disagree with meta) raises instead of
     silently probing a torn index."""
+    import os
     import shutil
 
     import pytest
@@ -258,8 +260,17 @@ def test_dedup_index_commit_marker_and_tamper_guard(spark, sf_dir, tmp_path):
     assert write_dedup_index(index, path) == 1
     committed = sorted(map(tuple, incremental_dedup_indexed(new, path).collect()))
 
-    # crash mid-write of v=2: data frames exist, meta never written
+    # crash while meta is written: v=2/meta/ holds a part file, but
+    # the job never committed (no _SUCCESS)
     assert write_dedup_index(index.limit(10), path) == 2
+    os.remove(f"{path}/v=2/meta/_SUCCESS")
+    assert any(f.startswith("part-") for f in os.listdir(f"{path}/v=2/meta"))
+    torn_meta = sorted(
+        map(tuple, incremental_dedup_indexed(new, path).collect())
+    )
+    assert torn_meta == committed  # still reads v=1
+
+    # crash before meta: data frames exist, meta never written
     shutil.rmtree(f"{path}/v=2/meta")
     after_crash = sorted(
         map(tuple, incremental_dedup_indexed(new, path).collect())
