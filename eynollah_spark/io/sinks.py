@@ -38,13 +38,19 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _bucket_col(n_buckets: int):
-    # pmod(xxhash64(conv_id)) — deterministic, executor-side, no UDF
+N_BUCKETS = 16  # default sink bucket count
+
+
+def conv_bucket(n_buckets: int):
+    """A conversation's sink bucket, pmod(xxhash64(conv_id), n_buckets):
+    deterministic, executor-side, no UDF. The extraction exchange
+    partitions on the same expression, so each bucket is written by
+    exactly one task."""
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
 class BucketedSpanSink:
-    def __init__(self, root: str, n_buckets: int = 16, run_tag: str = "run"):
+    def __init__(self, root: str, n_buckets: int = N_BUCKETS, run_tag: str = "run"):
         self.root = root
         self.n_buckets = n_buckets
         self.data_dir = os.path.join(root, "data")
@@ -83,7 +89,7 @@ class BucketedSpanSink:
         ]
         if not todo:
             return []
-        bucketed = spans.withColumn("_bucket", _bucket_col(self.n_buckets)).filter(
+        bucketed = spans.withColumn("_bucket", conv_bucket(self.n_buckets)).filter(
             F.col("_bucket").isin([int(b) for b in todo])
         )
         (
@@ -155,7 +161,7 @@ class IcebergSpanSink:
     Exercised only where an Iceberg catalog exists
     (tests/test_resume_metrics.py skips it in this container)."""
 
-    def __init__(self, spark: SparkSession, table: str, n_buckets: int = 16,
+    def __init__(self, spark: SparkSession, table: str, n_buckets: int = N_BUCKETS,
                  run_tag: str = "run"):
         self.spark = spark
         self.table = table
@@ -183,7 +189,7 @@ class IcebergSpanSink:
         ]
         if not todo:
             return []
-        bucketed = spans.withColumn("_bucket", _bucket_col(self.n_buckets)).filter(
+        bucketed = spans.withColumn("_bucket", conv_bucket(self.n_buckets)).filter(
             F.col("_bucket").isin([int(b) for b in todo])
         )
         if self.spark.catalog.tableExists(self.table):
@@ -207,7 +213,7 @@ class IcebergSpanSink:
         )
 
 
-def span_sink(spark: SparkSession, root_or_table: str, n_buckets: int = 16,
+def span_sink(spark: SparkSession, root_or_table: str, n_buckets: int = N_BUCKETS,
               run_tag: str = "run"):
     """Environment-dispatching sink factory: an Iceberg catalog in the
     session config selects ``IcebergSpanSink`` (snapshot commits); no
@@ -226,4 +232,4 @@ def filter_pending_turns(turns: DataFrame, sink: BucketedSpanSink) -> DataFrame:
     done = sink.done_buckets()
     if not done:
         return turns
-    return turns.filter(~_bucket_col(sink.n_buckets).isin([int(b) for b in done]))
+    return turns.filter(~conv_bucket(sink.n_buckets).isin([int(b) for b in done]))

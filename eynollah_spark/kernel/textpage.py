@@ -313,15 +313,26 @@ def analyze_turns_frames(
     """Iterator-friendly twin of ``analyze_turns_batch``: returns the
     frames of the two emission front ends (``_emit_fast`` for pages
     without column splits, ``_emit_cols`` for column pages) as a LIST
-    (0-2 entries) instead of concatenating them — mapInPandas yields
-    each directly, skipping the pandas block consolidation that concat
-    forces. Row order across the frames is NOT part of the contract
-    (extract.py imposes the conversation windows downstream)."""
-    return _analyze_batch(pdf, model, want_diag=False, as_frames=True)
+    (0-2 entries) instead of concatenating them, skipping the pandas
+    block consolidation that concat forces. Row order across the
+    frames is NOT part of the contract."""
+    return [f for _pages, f in analyze_turns_parts(pdf, model)]
+
+
+def analyze_turns_parts(
+    pdf: pd.DataFrame, model: LineModel | None = None
+) -> list[tuple[np.ndarray, pd.DataFrame]]:
+    """``analyze_turns_frames`` with each frame's span pages: pairs of
+    (row position in ``pdf`` of every span, frame). Each frame is in
+    (page, span_idx) order and no page spans two frames, so a stable
+    sort of the concatenated positions gives the batch's spans in
+    (turn, span_idx) order while mapInPandas yields the frames as
+    they are."""
+    return _analyze_batch(pdf, model, want_diag=False, as_parts=True)
 
 
 def _analyze_batch(
-    pdf: pd.DataFrame, model, want_diag: bool, as_frames: bool = False
+    pdf: pd.DataFrame, model, want_diag: bool, as_parts: bool = False
 ):
     if model is None:
         model = LineModel()
@@ -771,8 +782,8 @@ def _analyze_batch(
         )
         for p in parts
     ]
-    if as_frames:
-        return frames
+    if as_parts:
+        return [(p["page"], f) for p, f in zip(parts, frames)]
     if len(frames) == 1:
         return frames[0]
     if frames:

@@ -14,7 +14,8 @@ streaming shapes are provided:
   operators/relational.py (same 30-min gap rule)
 - streaming extraction: the SAME batch kernel applied per micro-batch
   through ``foreachBatch`` (kernel is stateless per turn, the
-  ordering windows run within each micro-batch's conversations) —
+  conversation ids are stamped within each micro-batch's
+  conversations) —
   checkpointed, exactly-once per sink commit.
 - in-flight curation twins: exact dedup (stream-stream and
   cross-snapshot stream-static), MinHash near-dup vs a static index,
@@ -269,8 +270,9 @@ def stream_extract_spans(
     ID CONTRACT (load-bearing — do not join by bare ids): the kernel
     is per-turn stateless, so per-turn spans (text, char offsets,
     region types) are byte-equal to the batch pipeline however the
-    stream is split. But the ordering windows run per micro-batch, so
-    ``reading_order`` / ``region_id`` / ``line_id`` restart per batch
+    stream is split. But the conversation ids are stamped per
+    micro-batch, so ``reading_order`` / ``region_id`` / ``line_id``
+    restart per batch
     and are unique only within ``(_batch_id, conv_id)`` — which is why
     the sink stamps ``_batch_id`` into the output schema. A
     conversation split across micro-batches gets batch-local ids;

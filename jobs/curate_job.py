@@ -7,8 +7,8 @@ for the full training-data flow:
         jobs/curate_job.py --input /path/transcripts \
         --output /path/curated [--quality-min 0.5] [--near-dup-t 0.5]
 
-Flow: scan transcripts -> layout kernel (narrow) -> conv_id ordering
-windows (one exchange) -> per-conversation main-content reassembly
+Flow: scan transcripts -> one turn exchange on the conversation bucket
+-> layout kernel with id stamps -> per-conversation main-content reassembly
 (text+header spans in reading order; tool/boilerplate/separator spans
 dropped) -> quality gate -> exact dedup (keep lowest conv) ->
 MinHash-LSH near-dup removal (deterministic survivor: the lower
@@ -48,8 +48,11 @@ def main() -> None:
     extract = extract_spans_salted if args.salted else extract_spans
     spans = extract(turns, metrics=metrics)
 
-    # main-content reassembly: one groupBy(conv_id) — reuses the
-    # extraction exchange key, so this is NOT a second shuffle family
+    # main-content reassembly: one groupBy(conv_id). The extraction
+    # exchange is keyed on the conversation bucket, not on conv_id, so
+    # this adds an exchange of its own; conversations sit whole in
+    # their partitions, so the partial aggregate already ships one row
+    # per conversation
     docs = (
         spans.filter(F.col("region_type").isin("text", "header"))
         .groupBy("conv_id")

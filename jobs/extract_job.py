@@ -6,11 +6,13 @@
         jobs/extract_job.py --input /path/transcripts \
         --output /path/spans --buckets 64 [--salted] [--resume]
 
-Flow (north rule): scan transcripts -> Arrow layout kernel (narrow) ->
-conv_id ordering windows (one exchange) -> bucketed resumable sink
-with per-partition lineage + counters. With --resume, buckets already
-committed by a previous run are skipped (anti-join on the manifest)
-and only pending work executes — restart-safe, no duplicates.
+Flow (north rule): scan transcripts -> one exchange of the turns onto
+the sink's --buckets conversation buckets -> Arrow layout kernel that
+stamps reading_order / region / line ids as it emits -> bucketed
+resumable sink, each bucket written by one task, with counters. With
+--resume, buckets already committed by a previous run are skipped
+(anti-join on the manifest) and only pending work executes —
+restart-safe, no duplicates.
 """
 
 from __future__ import annotations
@@ -67,10 +69,11 @@ def main() -> None:
 
     if args.salted:
         spans = extract_spans_salted(
-            turns, cfg, salt_buckets=args.salt_buckets, metrics=metrics
+            turns, cfg, salt_buckets=args.salt_buckets, metrics=metrics,
+            n_buckets=args.buckets,
         )
     else:
-        spans = extract_spans(turns, cfg, metrics=metrics)
+        spans = extract_spans(turns, cfg, metrics=metrics, n_buckets=args.buckets)
 
     committed = sink.write(spans)
 

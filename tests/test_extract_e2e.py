@@ -3,6 +3,7 @@ single-node oracle (incl. window-derived ids), partition invariance,
 and distributed-generator parity (SURVEY.md §5 graft strategy 1/4)."""
 
 import pandas as pd
+import pytest
 import pyspark.sql.functions as F
 
 from eynollah_spark.fixtures.transcripts import (
@@ -283,3 +284,141 @@ def test_mega_conversation_skew(spark):
     mega_orders = [r.reading_order for r in base if r.conv_id == "mega"]
     assert sorted(mega_orders) == list(range(len(mega_orders)))
     assert len(mega_orders) == 20_000 * 3  # header + 2 body lines per turn
+
+
+# --- id stamps across Arrow batches ---------------------------------------
+
+BATCH_KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+@pytest.fixture
+def tiny_batches(spark):
+    """3-record Arrow batches: conversations straddle turn batches and
+    turns straddle span batches."""
+    old = spark.conf.get(BATCH_KEY)
+    spark.conf.set(BATCH_KEY, "3")
+    yield
+    spark.conf.set(BATCH_KEY, old)
+
+
+def _with_mega(local: pd.DataFrame) -> pd.DataFrame:
+    """The standard corpus plus one conversation of its pages repeated."""
+    mega = pd.concat([local, local], ignore_index=True)
+    mega["conv_id"] = "mega"
+    mega["turn_idx"] = range(len(mega))
+    return pd.concat([local, mega], ignore_index=True)
+
+
+def test_stamps_carry_across_batches(spark, tiny_batches):
+    local = _with_mega(generate_local(SPEC))
+    exp = _normalize(_golden(local))
+    # every conversation longer than one batch straddles turn batches,
+    # every turn with more spans than one batch straddles span batches
+    assert local.groupby("conv_id").size().max() > 3
+    assert exp.groupby(["conv_id", "turn_idx"]).size().max() > 3
+    turns = spark.createDataFrame(local, schema=TRANSCRIPT_SCHEMA)
+    for variant in [
+        extract_spans(turns),
+        extract_spans(turns.repartition(13)),
+        extract_spans_salted(turns, salt_buckets=5),
+    ]:
+        pd.testing.assert_frame_equal(_normalize(variant.toPandas()), exp)
+
+
+def test_stamps_empty_partitions_and_empty_input(spark, tiny_batches):
+    from eynollah_spark.operators.extract import SPAN_SCHEMA
+
+    # one conversation: every other exchange partition is empty
+    local = generate_local(SPEC)
+    local = local[local["conv_id"] == local["conv_id"].iloc[0]]
+    turns = spark.createDataFrame(local, schema=TRANSCRIPT_SCHEMA).repartition(7)
+    exp = _normalize(_golden(local))
+    for variant in [extract_spans(turns), extract_spans_salted(turns, salt_buckets=5)]:
+        pd.testing.assert_frame_equal(_normalize(variant.toPandas()), exp)
+
+    empty = spark.createDataFrame(
+        [], "conv_id string, turn_idx int, role string, text string"
+    )
+    for variant in [extract_spans(empty), extract_spans_salted(empty)]:
+        assert variant.collect() == []
+        assert variant.schema.fieldNames() == SPAN_SCHEMA.fieldNames()
+
+
+def _window_ids(spans):
+    """SPEC §10 as Spark windows, the reference for the stamps:
+    reading_order = row_number over (turn_idx, span_idx), region number
+    = dense_rank of (turn_idx, region_seq), line = row_number within
+    the region by span_idx."""
+    from pyspark.sql import Window
+
+    conv = Window.partitionBy("conv_id")
+    region = F.dense_rank().over(conv.orderBy("turn_idx", "region_seq"))
+    line = F.row_number().over(
+        Window.partitionBy("conv_id", "turn_idx", "region_seq").orderBy("span_idx")
+    )
+    return spans.select(
+        "*",
+        (F.row_number().over(conv.orderBy("turn_idx", "span_idx")) - 1)
+        .cast("int")
+        .alias("reading_order"),
+        F.format_string("region_%04d", region).alias("region_id"),
+        F.format_string("region_%04d_line_%04d", region, line).alias("line_id"),
+    )
+
+
+def test_stamp_pass_matches_windows_on_unordered_regions(spark, tiny_batches):
+    """The stamp-only pass on spans whose region_seq steps back within
+    a turn (as a column page could number them): a region number is the
+    dense rank of (turn_idx, region_seq), not a count of changes in span
+    order, and a region's lines number on across its gaps. Turns of 2-7
+    spans straddle the 3-span batches."""
+    from eynollah_spark.operators.extract import KERNEL_OUT_SCHEMA, _stamp_spans
+
+    seqs = [[0, 1, 0, 2, 1], [1, 0], [0, 0, 1, 1, 0, 2, 2], [3, 2, 1, 0], [0, 1]]
+    rows = [
+        (conv, turn, i, "text", rs, i, i + 1, f"{conv}/{turn}/{i}")
+        for conv in ["a", "b", "c"]
+        for turn, seq in enumerate(seqs if conv != "b" else seqs[::-1])
+        for i, rs in enumerate(seq)
+    ]
+    spans = spark.createDataFrame(rows, KERNEL_OUT_SCHEMA).repartition(3)
+    got = _normalize(_stamp_spans(spans, 16).toPandas())
+    exp = _normalize(_window_ids(spans).toPandas())
+    pd.testing.assert_frame_equal(got, exp)
+
+
+def test_salted_kernel_stage_spreads_skew(spark, tmp_path):
+    """The salted path's kernel stage runs in at least
+    min(salt_buckets, defaultParallelism) tasks on a 20k-turn
+    conversation: AQE must not coalesce the (conv_id, salt) exchange."""
+    sc = spark.sparkContext
+    mega = spark.range(20_000).select(
+        F.lit("mega").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.concat(F.lit("## T"), F.col("id").cast("string"), F.lit("\nbody line")).alias(
+            "text"
+        ),
+    )
+    path = str(tmp_path / "mega")
+    mega.write.parquet(path)
+    salt_buckets = 16
+    spans = extract_spans_salted(spark.read.parquet(path), salt_buckets=salt_buckets)
+    group = "salted-skew-spread"
+    sc.setJobGroup(group, "salted kernel stage spread")
+    try:
+        spans.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    ran = [
+        info
+        for sid in sorted(
+            sid for jid in tracker.getJobIdsForGroup(group)
+            for sid in tracker.getJobInfo(jid).stageIds
+        )
+        if (info := tracker.getStageInfo(sid)).numCompletedTasks > 0
+    ]
+    # scan, kernel behind the salt exchange, stamp pass
+    assert len(ran) == 3, ran
+    assert ran[1].numTasks >= min(salt_buckets, sc.defaultParallelism), ran

@@ -19,21 +19,41 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_extract_single_exchange(spark):
-    """The pipeline's contract: kernel narrow on the scan, exactly ONE
-    exchange (hash by conv_id) feeding all three ordering windows."""
-    from eynollah_spark.operators.extract import extract_spans
-
-    turns = spark.read.parquet(f"{SF}/events.parquet").selectExpr(
+def _extract_turns(spark):
+    return spark.read.parquet(f"{SF}/events.parquet").selectExpr(
         "cast(event_id as string) as conv_id",
         "cast(event_id % 5 as int) as turn_idx",
         "'user' as role",
         "props as text",
     )
-    plan = _plan(extract_spans(turns))
+
+
+def test_extract_single_exchange(spark):
+    """The pipeline's contract: exactly ONE exchange, partitioned by
+    the sink's conversation bucket over the TURN rows (below the
+    kernel), with an explicit partition count that AQE keeps; no
+    window, the ids are stamped in the kernel iterator. The salted
+    variant adds one bucket-keyed span exchange, still no window."""
+    from eynollah_spark.operators.extract import extract_spans, extract_spans_salted
+
+    df = extract_spans(_extract_turns(spark))
+    plan = _plan(df)
     assert plan.count("Exchange") == 1, plan
-    assert "hashpartitioning(conv_id" in plan
-    assert plan.count("Window") == 3
+    bucket = "direct_shuffle_partition_id(cast(pmod(xxhash64(conv_id"
+    assert f"Exchange shufflepartitionidpassthrough({bucket}" in plan, plan
+    assert "REPARTITION_BY_NUM" in plan, plan
+    # the tree prints parents first: the exchange sits under the kernel
+    assert plan.index("MapInPandas") < plan.index("Exchange"), plan
+    assert "Window" not in plan, plan
+    df.collect()
+    final = _plan(df)
+    assert "isFinalPlan=true" in final, final
+    assert "coalesced" not in final, final
+
+    salted = _plan(extract_spans_salted(_extract_turns(spark)))
+    assert salted.count("Exchange") == 2, salted
+    assert f"Exchange shufflepartitionidpassthrough({bucket}" in salted, salted
+    assert "Window" not in salted, salted
 
 
 def test_star_join_broadcasts_dims(spark):
